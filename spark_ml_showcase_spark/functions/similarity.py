@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_ml_showcase_spark.functions import vectors as V
+# drain_cache_events is re-exported: the bench drains store events here
+from spark_ml_showcase_spark.sources.io import (  # noqa: F401
+    drain_cache_events,
+    staged_dir,
+)
 
 
 def as_double(col: str | Column) -> Column:
@@ -556,9 +561,10 @@ def cached_ivf_index(
     build-at-ingest / probe-per-batch split a 100 TB deployment runs
     (``build_ivf_index`` docstring), now reflected in the suite.
 
-    SESSION-SCOPED since r16 (r15 judge item #1): the store root is a
-    per-process tempdir removed at exit, so every run rebuilds from the
-    parquet inputs — nothing keyed on the testdata outlives the run.
+    SESSION-SCOPED: the store is a
+    ``sources.io.staged_dir`` under the per-process root removed at
+    exit, so every run rebuilds from the parquet inputs — nothing keyed
+    on the testdata outlives the run.
     The content fingerprint still guards a fixture regenerated
     mid-session, and ``candidates_fn`` is only invoked on a cache miss
     (the derivation — quantization, pooling — is part of ``variant``,
@@ -609,23 +615,14 @@ def cached_ivf_store_dir(
     r13 ADVICE, low): it is folded into the cache key so an edit to the
     derivation logic invalidates the store mechanically instead of
     relying on variant-renaming discipline."""
-    key_suffix = f"{variant}|{n_lists}|{seed}|{params}"
-    prefix = f"{variant}_{n_lists}_{seed}_"
 
     def build(idx_dir: str) -> None:
         build_ivf_index(
             candidates_fn(), n_lists=n_lists, seed=seed, index_dir=idx_dir
         )
 
-    return _fingerprint_cached_dir(source_path, key_suffix, prefix, build)
+    return staged_dir(f"ivf_{variant}_{n_lists}_{seed}", source_path, build, params)
 
-
-#: build/hit events since the last drain — (prefix, "build"|"hit")
-#: tuples appended by ``_fingerprint_cached_dir``. ``bench.py`` drains
-#: this per query to stamp ``cache: build|hit`` into ``plan_metrics``
-#: (r13 judge item #4), making a cold-build run-1 outlier mechanically
-#: distinguishable from a plan regression in the close artifact.
-_CACHE_EVENTS: list[tuple[str, str]] = []
 
 #: derivation descriptor for cache consumers whose ``candidates_fn`` is
 #: the raw fixture unchanged — shared by every such site so they keep
@@ -633,109 +630,6 @@ _CACHE_EVENTS: list[tuple[str, str]] = []
 #: the build cost). Bump the version token when the identity contract
 #: changes.
 IDENTITY_PARAMS = "src=identity|v1"
-
-
-def drain_cache_events() -> list[tuple[str, str]]:
-    """Return and clear the (prefix, build|hit) events recorded by the
-    fingerprint caches since the previous drain."""
-    out = list(_CACHE_EVENTS)
-    _CACHE_EVENTS.clear()
-    return out
-
-
-#: lazily-created PER-PROCESS cache root (r15 judge item #1): the store
-#: lives exactly as long as this driver process, so every bench/oracle
-#: invocation rebuilds its IVF templates and eval-truth frames from the
-#: parquet inputs — nothing keyed on the testdata ever persists across
-#: runs. Within one run the templates are still shared across the
-#: queries that probe the same index (the build-at-ingest /
-#: probe-per-batch split the operators document). Removed at exit.
-_SESSION_CACHE_ROOT: str | None = None
-
-
-def _session_cache_root() -> str:
-    global _SESSION_CACHE_ROOT
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    env = os.environ.get("SMS_IVF_CACHE")
-    if env:
-        return env
-    if _SESSION_CACHE_ROOT is None:
-        _SESSION_CACHE_ROOT = tempfile.mkdtemp(prefix="sms_ivf_session_")
-        atexit.register(shutil.rmtree, _SESSION_CACHE_ROOT, ignore_errors=True)
-    return _SESSION_CACHE_ROOT
-
-
-def _fingerprint_cached_dir(
-    source_path: str, key_suffix: str, prefix: str, build_fn
-) -> str:
-    """Shared machinery of the suite's SESSION-SCOPED content-fingerprint
-    caches: resolve the (source content, params) store dir under the
-    per-process root, call ``build_fn`` on a miss, prune TTL-expired
-    same-prefix siblings (a regenerated fixture mid-session leaves the
-    previous fingerprint's dir behind), and return the dir. Every
-    resolution appends a (prefix, build|hit) event for
-    ``drain_cache_events``.
-
-    The root is per-process (r15 judge item #1): a cross-run /tmp store
-    keyed on the testdata content amortized the KMeans/truth builds
-    across bench runs, which flattered the ivf-family timings — under
-    the optimization-round rules that is precomputation, not
-    optimization. Now the first resolution in a run always builds from
-    the parquet inputs; only later resolutions WITHIN the same process
-    hit. ``SMS_IVF_CACHE`` still overrides the root explicitly (tests
-    exercise the machinery against a pinned directory)."""
-    import hashlib
-    import os
-    import shutil
-    import time
-
-    from spark_ml_showcase_spark.sources.io import (
-        _source_fingerprint,
-        fp_cache_ok,
-        fp_record,
-    )
-
-    key = f"{_source_fingerprint(source_path)}|{source_path}|{key_suffix}"
-    h = hashlib.md5(key.encode()).hexdigest()[:16]
-    root = _session_cache_root()
-    idx_dir = os.path.join(root, prefix + h)
-    fp_path = idx_dir + ".fp"
-    if not fp_cache_ok(fp_path, key):
-        os.makedirs(root, exist_ok=True)
-        ttl = float(os.environ.get("SMS_IVF_CACHE_TTL_S", "3600"))
-        now = time.time()
-        # sorted: a store dir sorts before its ".fp" marker, so the
-        # dir's staleness is judged while the marker still exists
-        for d in sorted(os.listdir(root)):
-            if d.startswith(prefix) and d not in (prefix + h, prefix + h + ".fp"):
-                p = os.path.join(root, d)
-                marker = p if p.endswith(".fp") else p + ".fp"
-                try:
-                    age = now - os.path.getmtime(marker)
-                except OSError:
-                    try:
-                        age = now - os.path.getmtime(p)
-                    except OSError:
-                        continue
-                if age < ttl:
-                    continue
-                if os.path.isdir(p):
-                    shutil.rmtree(p, ignore_errors=True)
-                else:
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-        build_fn(idx_dir)
-        fp_record(fp_path, key)
-        _CACHE_EVENTS.append((prefix, "build"))
-    else:
-        _CACHE_EVENTS.append((prefix, "hit"))
-    return idx_dir
 
 
 def cached_eval_frame(
@@ -763,15 +657,13 @@ def cached_eval_frame(
     query predicate, a code-version salt — r13 ADVICE, low): they are
     folded into the cache key, so editing the truth-building logic
     without renaming the variant invalidates the materialized frame
-    mechanically instead of silently serving a stale /tmp frame as the
+    mechanically instead of silently serving a stale frame as the
     recall denominator across code versions."""
 
     def build(d: str) -> None:
         build_fn().write.mode("overwrite").parquet(d)
 
-    d = _fingerprint_cached_dir(
-        source_path, f"evalframe|{variant}|{params}", f"eval_{variant}_", build
-    )
+    d = staged_dir(f"eval_{variant}", source_path, build, params)
     return spark.read.parquet(d)
 
 

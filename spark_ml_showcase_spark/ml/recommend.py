@@ -61,11 +61,6 @@ def kmeans(k: int = 25, seed: int = SEED) -> KMeans:
     return KMeans(k=k, seed=seed)
 
 
-def cluster_sizes(kmeans_model) -> list[int]:
-    """M14: summary.clusterSizes (als_clustering_analysis.py:116-119)."""
-    return list(kmeans_model.summary.clusterSizes)
-
-
 def largest_cluster_genre_top10(
     clustered_users: DataFrame,
     train_ratings: DataFrame,

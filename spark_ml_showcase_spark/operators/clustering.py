@@ -127,13 +127,11 @@ def materialize_events_clustered(
     *,
     mode: str = "value_range",
     n_partitions: int = 8,
-    base_dir: str = "/tmp/smss_clustered",
 ) -> str:
     """Materialize a clustered copy of ``events`` — ``value_range``
     (1-D on ``value``) or ``zorder_value_user`` (Z-order on
-    ``(value, user_id)``). Same idempotence contract as the other
-    materializers: keyed by a content fingerprint of the source parquet,
-    rebuilt when the driver regenerates the fixture. Returns the path.
+    ``(value, user_id)``). Built once per process and per source content
+    (``io.staged_dir``), like the other materializers. Returns the path.
     """
     from spark_ml_showcase_spark.sources.catalog import Catalog
 
@@ -146,18 +144,15 @@ def materialize_events_clustered(
     else:
         raise ValueError(f"unknown clustering mode {mode!r}")
 
-    key = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(base_dir, key, mode)
-    fp_path = os.path.join(base_dir, key, f"_SOURCE_FP_{mode}")
-    fp = io._source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    cached = os.path.exists(os.path.join(path, "_SUCCESS")) and io.fp_cache_ok(
-        fp_path, fp
+    def build(path: str) -> None:
+        io.write_parquet(layout(Catalog(spark, sf_dir).events), path)
+
+    return io.staged_dir(
+        f"clustered_{mode}",
+        os.path.join(sf_dir, "events.parquet"),
+        build,
+        key=str(n_partitions),
     )
-    if not cached:
-        ev = Catalog(spark, sf_dir).events
-        io.write_parquet(layout(ev), path)
-        io.fp_record(fp_path, fp)
-    return path
 
 
 def file_band_overlap(path: str, col: str, lo: float, hi: float) -> tuple[int, int]:

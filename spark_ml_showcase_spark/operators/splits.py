@@ -129,15 +129,6 @@ def stratified_split(
     return df.filter(b < thresh), df.filter(b >= thresh)
 
 
-def sample_by(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 40
-) -> DataFrame:
-    """Spark-native stratified sample (``df.stat.sampleBy``) — the
-    idiomatic one-liner for the reference's loop when only the sampled
-    side is needed."""
-    return df.stat.sampleBy(strata_col, fractions, seed)
-
-
 def portable_sample_by(
     df: DataFrame,
     strata_col: str,

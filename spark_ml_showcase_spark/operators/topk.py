@@ -36,11 +36,6 @@ def top_k(df: DataFrame, k: int, order_by: list[tuple[str, str]]) -> DataFrame:
     return df.orderBy(*_sort_cols(order_by)).limit(k)
 
 
-def top_1(df: DataFrame, order_by: list[tuple[str, str]]):
-    """O3: first row under an ordering (driver-side Row)."""
-    return df.orderBy(*_sort_cols(order_by)).first()
-
-
 def top_k_per_group(
     df: DataFrame,
     group_cols: list[str],

@@ -6,9 +6,6 @@ the parquet sink (S5), and the cache hint (S4).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -142,9 +139,7 @@ def approx_distinct_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = Catalog(spark, sf_dir).orders
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "spark_ml_showcase_sink", "orders_roundtrip"
-    )
+    out_dir = io.run_dir("sink", "orders_roundtrip")
     io.write_parquet(
         orders.filter(F.col("o_totalprice") > 100000), out_dir, mode="overwrite"
     )
@@ -175,9 +170,7 @@ def parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Catalog(spark, sf_dir).lineitem
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "spark_ml_showcase_sink", "lineitem_orc"
-    )
+    out_dir = io.run_dir("sink", "lineitem_orc")
     io.write_orc(li.filter(F.col("l_quantity") >= 30), out_dir, mode="overwrite")
     back = io.read_orc(spark, out_dir)
     return (

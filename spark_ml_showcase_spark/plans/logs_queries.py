@@ -181,8 +181,6 @@ def clf_country_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def clf_report_txt_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     parsed = logs.parse_clf(io.read_text(spark, _CLF_GZ))
     country = (
         F.when(F.col("host").endswith(".de"), "de")
@@ -199,9 +197,7 @@ def clf_report_txt_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("country")
     )
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_ml_showcase_sink", "country_report.csv"
-    )
+    out = io.run_dir("sink", "country_report.csv")
     io.write_report(report, out, fmt="csv")
     back = io.read_csv(
         spark,
@@ -281,15 +277,12 @@ def clf_day_hour_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def clf_png_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from spark_ml_showcase_spark.sources import png
 
     parsed = logs.parse_clf(io.read_text(spark, _CLF_GZ))
     de = logs.country_filter(parsed, ".de")
-    # fixed, reused artifact dir — bench reruns this query repeatedly and
-    # a per-invocation mkdtemp would leak one directory per run
-    out_dir = os.path.join(tempfile.gettempdir(), "smss_artifacts", "clf_png")
+    # one artifact dir per process, reused across reruns of this query
+    out_dir = io.run_dir("artifacts", "clf_png")
     os.makedirs(out_dir, exist_ok=True)
 
     mat = (

@@ -15,6 +15,8 @@ must carry a dynamicpruning expression.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -170,19 +172,8 @@ def clustered_scan_value_band(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snapshot_diff_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ml_showcase_spark.sources import versioned
     from spark_ml_showcase_spark.sources.catalog import Catalog
-    import os
 
-    key = os.path.basename(os.path.normpath(sf_dir))
-    table_dir = os.path.join("/tmp/smss_versioned", key, "documents")
-    fp_path = os.path.join("/tmp/smss_versioned", key, "_SOURCE_FP")
-    fp = io._source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    if not (
-        len(versioned.snapshot_versions(table_dir)) >= 2
-        and io.fp_cache_ok(fp_path, fp)
-    ):
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    def build(table_dir: str) -> None:
         docs = Catalog(spark, sf_dir).documents
         v0 = docs.filter(F.col("doc_id") % 5 != 0)
         v1 = docs.filter(F.col("doc_id") % 7 != 0).withColumn(
@@ -193,7 +184,10 @@ def snapshot_diff_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         versioned.write_snapshot(v0, table_dir)
         versioned.write_snapshot(v1, table_dir, expected_parent=0)
-        io.fp_record(fp_path, fp)
+
+    table_dir = io.staged_dir(
+        "snapshot_docs", os.path.join(sf_dir, "documents.parquet"), build
+    )
     return versioned.snapshot_diff(
         spark, table_dir, 0, 1, "doc_id", ["text"]
     ).orderBy("doc_id")
@@ -220,22 +214,10 @@ def snapshot_diff_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def snapshot_merge_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from spark_ml_showcase_spark.sources import versioned
     from spark_ml_showcase_spark.sources.catalog import Catalog
 
-    key = os.path.basename(os.path.normpath(sf_dir))
-    table_dir = os.path.join("/tmp/smss_versioned", key, "documents_merge")
-    fp_path = os.path.join("/tmp/smss_versioned", key, "_SOURCE_FP_MERGE")
-    fp = io._source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    if not (
-        len(versioned.snapshot_versions(table_dir)) >= 2
-        and io.fp_cache_ok(fp_path, fp)
-    ):
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    def build(table_dir: str) -> None:
         docs = Catalog(spark, sf_dir).documents.select("doc_id", "text")
         versioned.write_snapshot(docs, table_dir)
         updates = docs.filter(F.col("doc_id") % 6 == 0).withColumn(
@@ -247,7 +229,10 @@ def snapshot_merge_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         versioned.merge_keys(spark, table_dir, updates, "doc_id")
-        io.fp_record(fp_path, fp)
+
+    table_dir = io.staged_dir(
+        "snapshot_merge", os.path.join(sf_dir, "documents.parquet"), build
+    )
     return versioned.read_snapshot(spark, table_dir).orderBy("doc_id")
 
 
@@ -279,23 +264,10 @@ def snapshot_merge_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hypertable_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from spark_ml_showcase_spark.operators import hypertable
-    from spark_ml_showcase_spark.sources import versioned
     from spark_ml_showcase_spark.sources.catalog import Catalog
 
-    key = os.path.basename(os.path.normpath(sf_dir))
-    table_dir = os.path.join("/tmp/smss_versioned", key, "events_rollup")
-    fp_path = os.path.join("/tmp/smss_versioned", key, "_SOURCE_FP_ROLLUP")
-    fp = io._source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    if not (
-        len(versioned.snapshot_versions(table_dir)) >= 3
-        and io.fp_cache_ok(fp_path, fp)
-    ):
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    def build(table_dir: str) -> None:
         ev = Catalog(spark, sf_dir).events
         for m in (0, 1, 2):
             hypertable.rollup_refresh(
@@ -306,7 +278,10 @@ def hypertable_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 value_col="value",
                 keys=["event_type"],
             )
-        io.fp_record(fp_path, fp)
+
+    table_dir = io.staged_dir(
+        "events_rollup", os.path.join(sf_dir, "events.parquet"), build
+    )
     return hypertable.rollup_read(spark, table_dir).orderBy(
         "bucket_sec", "event_type"
     )
@@ -368,26 +343,13 @@ def scd2_user_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scd2_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build (or reuse, fingerprint-cached) the weekly user-type SCD-2
-    dimension shared by scd2_user_type_history and the temporal
+    """Build (once per process, ``io.staged_dir``) the weekly user-type
+    SCD-2 dimension shared by scd2_user_type_history and the temporal
     dimension-join query."""
-    import os
-
     from spark_ml_showcase_spark.operators import scd2
-    from spark_ml_showcase_spark.sources import versioned
     from spark_ml_showcase_spark.sources.catalog import Catalog
 
-    key = os.path.basename(os.path.normpath(sf_dir))
-    table_dir = os.path.join("/tmp/smss_versioned", key, "user_type_scd2")
-    fp_path = os.path.join("/tmp/smss_versioned", key, "_SOURCE_FP_SCD2")
-    fp = io._source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    if not (
-        len(versioned.snapshot_versions(table_dir)) >= 1
-        and io.fp_cache_ok(fp_path, fp)
-    ):
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    def build(table_dir: str) -> None:
         ev = Catalog(spark, sf_dir).events
         ord_col = F.col("ts").cast("long") * F.lit(100000000) + F.col(
             "event_id"
@@ -410,8 +372,10 @@ def _scd2_store(spark: SparkSession, sf_dir: str) -> str:
                 attr_cols=["event_type"],
                 effective_col="eff",
             )
-        io.fp_record(fp_path, fp)
-    return table_dir
+
+    return io.staged_dir(
+        "user_type_scd2", os.path.join(sf_dir, "events.parquet"), build
+    )
 
 
 _SCD2_HIST_SQL = """
@@ -528,31 +492,10 @@ def purchase_with_user_type_asof(
 def hypertable_distinct_users_hourly(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     from spark_ml_showcase_spark.operators import hypertable
-    from spark_ml_showcase_spark.sources import versioned
     from spark_ml_showcase_spark.sources.catalog import Catalog
 
-    key = os.path.basename(os.path.normpath(sf_dir))
-    # _v2: the KMV state schema changed array<double> → array<bigint>
-    # (full-resolution hashes, advisor r8); a pre-change cached store
-    # would feed doubles to the bigint estimator, so the cache key must
-    # change with the state format
-    table_dir = os.path.join(
-        "/tmp/smss_versioned", key, "events_rollup_kmv_v2"
-    )
-    fp_path = os.path.join(
-        "/tmp/smss_versioned", key, "_SOURCE_FP_ROLLUP_KMV_V2"
-    )
-    fp = io._source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    if not (
-        len(versioned.snapshot_versions(table_dir)) >= 3
-        and io.fp_cache_ok(fp_path, fp)
-    ):
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    def build(table_dir: str) -> None:
         ev = Catalog(spark, sf_dir).events
         for m in (0, 1, 2):
             hypertable.rollup_refresh(
@@ -565,7 +508,10 @@ def hypertable_distinct_users_hourly(
                 distinct_col="user_id",
                 kmv_k=4096,
             )
-        io.fp_record(fp_path, fp)
+
+    table_dir = io.staged_dir(
+        "events_rollup_kmv", os.path.join(sf_dir, "events.parquet"), build
+    )
     return (
         hypertable.rollup_read(spark, table_dir, kmv_k=4096)
         .select(

@@ -232,22 +232,17 @@ def stream_interval_join_click_purchase(
 )
 def stream_upsert_latest_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+
+    from spark_ml_showcase_spark.sources.io import run_dir
 
     staged = se.stage_events_split(spark, sf_dir, n_files=4)
     stream = se.stream_staged(spark, staged, max_files_per_trigger=1)
-    # pid-scoped state dir: the upsert wipes its state at call start, so
-    # two PROCESSES (driver + bench/pytest) running this query
-    # concurrently must not share one — bounded leak of one dir per
-    # (process, sf), reused across calls within a process
-    state_dir = os.path.join(
-        tempfile.gettempdir(),
-        "smss_upsert",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
+    # the upsert wipes its state at call start; the per-process root
+    # keeps concurrent processes apart
+    key = os.path.basename(os.path.normpath(sf_dir))
     state = se.upsert_latest_per_key(
         stream,
-        state_dir=state_dir,
+        state_dir=run_dir("upsert_state", key),
         keys=["user_id"],
         ts_col="ts",
         tie_col="event_id",
@@ -276,39 +271,28 @@ def stream_upsert_latest_per_user(spark: SparkSession, sf_dir: str) -> DataFrame
 @query("stream_lsh_dedup_docs")
 def stream_lsh_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from spark_ml_showcase_spark.sources.catalog import Catalog
-    from spark_ml_showcase_spark.sources.io import (
-        _source_fingerprint,
-        fp_cache_ok,
-        fp_record,
-    )
+    from spark_ml_showcase_spark.sources.io import run_dir, staged_dir
     from spark_ml_showcase_spark.streaming import corpus as sc_
 
     docs = Catalog(spark, sf_dir).documents.select("doc_id", "text")
-    base = os.path.join(tempfile.gettempdir(), "smss_lsh_stage")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(base, key, "docs_2drops")
-    fp_path = os.path.join(base, key, "_SOURCE_FP")
-    fp = _source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    if not (
-        os.path.exists(os.path.join(out, "_SUCCESS"))
-        and fp_cache_ok(fp_path, fp)
-    ):
-        docs.coalesce(1).write.mode("overwrite").parquet(out)
+
+    def build(out: str) -> None:
+        docs.coalesce(1).write.parquet(out)
         docs.filter(F.col("doc_id") % 5 == 0).select(
             (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
         ).coalesce(1).write.mode("append").parquet(out)
-        fp_record(fp_path, fp)
-    stream = se.stream_staged(spark, out, max_files_per_trigger=1)
-    # pid-scoped state: the non-resume call wipes state at start, so
-    # concurrent processes (driver + bench) must not share one dir
-    state_dir = os.path.join(
-        tempfile.gettempdir(), "smss_lsh_state", f"{key}_{os.getpid()}"
+
+    out = staged_dir(
+        "docs_2drops", os.path.join(sf_dir, "documents.parquet"), build
     )
+    stream = se.stream_staged(spark, out, max_files_per_trigger=1)
+    # the non-resume call wipes state at start; the per-process root
+    # keeps concurrent processes apart
+    key = os.path.basename(os.path.normpath(sf_dir))
     kept = sc_.stream_minhash_dedup(
-        stream, state_dir=state_dir, threshold=0.9
+        stream, state_dir=run_dir("lsh_state", key), threshold=0.9
     )
     cls = (
         F.when(F.col("doc_id") >= 1_000_000, F.lit("dup_copy_retained"))

@@ -28,7 +28,6 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -36,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
+
+from spark_ml_showcase_spark.sources.io import run_dir, staged_dir
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
@@ -73,12 +74,13 @@ def _ts_needs_long_read(path: str) -> bool:
 
 def _as_stream_dir(path: str) -> str:
     """The file-stream source requires a DIRECTORY; testdata ships single
-    parquet files. Stage a per-path temp dir containing a symlink (copy
-    fallback) to the file. Idempotent across runs."""
+    parquet files. Stage a per-path dir under the process's scratch root
+    containing a symlink (copy fallback) to the file. Idempotent within
+    a run."""
     if os.path.isdir(path):
         return path
     digest = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-    d = os.path.join(tempfile.gettempdir(), "spark_ml_showcase_stream", digest)
+    d = run_dir("stream_src", digest)
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, os.path.basename(path))
     if not os.path.exists(link):
@@ -139,28 +141,6 @@ def tumbling_counts(
         events = events.withWatermark("ts", watermark)
     return (
         events.groupBy(F.window("ts", window))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n",
-        )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    *,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str | None = "2 hours",
-) -> DataFrame:
-    """Streaming sliding-window counts (batch twin:
-    sliding_quarter_hour_counts)."""
-    if watermark:
-        events = events.withWatermark("ts", watermark)
-    return (
-        events.groupBy(F.window("ts", window, slide))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -259,7 +239,7 @@ def run_to_parquet(
     DESTRUCTIVE: a pre-existing ``out_dir`` is deleted wholesale before
     the run (sink + checkpoint must start empty for a deterministic
     result). Pass a dedicated directory, or omit ``out_dir`` for a fresh
-    tmp path per call.
+    path per call under the process's scratch root.
 
     Append mode emits a window only once the watermark passes its end,
     so the sink holds exactly the FINALIZED windows: with a finite
@@ -268,9 +248,7 @@ def run_to_parquet(
     final no-new-data batch that advances the watermark and flushes
     eligible state before terminating.
     """
-    base = out_dir or os.path.join(
-        tempfile.gettempdir(), "spark_ml_showcase_stream_sink", uuid.uuid4().hex[:12]
-    )
+    base = out_dir or run_dir("stream_sink", uuid.uuid4().hex[:12])
     if os.path.isdir(base):
         shutil.rmtree(base)
     data_dir = os.path.join(base, "data")
@@ -384,11 +362,7 @@ def stream_stream_interval_join(
 
 
 def stage_events_split(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    n_files: int = 4,
-    base_dir: str | None = None,
+    spark: SparkSession, sf_dir: str, *, n_files: int = 4
 ) -> str:
     """Re-stage the single-file events fixture as ``n_files`` parquet
     files so a file-source stream with ``maxFilesPerTrigger=1`` replays
@@ -401,31 +375,19 @@ def stage_events_split(
     event-time ordering must be ARRIVAL-ORDER independent, and this
     staging makes the test actually exercise that.
 
-    Idempotent per fixture: keyed on a content fingerprint of the source
-    (same contract as ``sources.io.materialize_events_by_day`` — a
-    regenerated fixture under the same path rebuilds the staging).
-    Returns the staged directory path.
+    Staged once per process and per source content
+    (``sources.io.staged_dir``). Returns the staged directory path.
     """
     from spark_ml_showcase_spark.sources.catalog import Catalog
-    from spark_ml_showcase_spark.sources.io import _source_fingerprint
 
-    base = base_dir or os.path.join(tempfile.gettempdir(), "smss_stream_stage")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(base, key, f"events_{n_files}parts")
-    fp_path = os.path.join(base, key, f"_SOURCE_FP_{n_files}")
-    fp = _source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    from spark_ml_showcase_spark.sources.io import fp_cache_ok, fp_record
+    def build(out: str) -> None:
+        Catalog(spark, sf_dir).events.repartitionByRange(
+            n_files, "event_id"
+        ).write.parquet(out)
 
-    cached = os.path.exists(os.path.join(out, "_SUCCESS")) and fp_cache_ok(
-        fp_path, fp
+    return staged_dir(
+        f"events_{n_files}parts", os.path.join(sf_dir, "events.parquet"), build
     )
-    if not cached:
-        ev = Catalog(spark, sf_dir).events
-        ev.repartitionByRange(n_files, "event_id").write.mode(
-            "overwrite"
-        ).parquet(out)
-        fp_record(fp_path, fp)
-    return out
 
 
 def stream_staged(

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_ml_showcase_spark.functions import similarity, vectors as V
+from spark_ml_showcase_spark.sources import io
 
 
 def _vecs(spark, n=40, dim=8, seed=7):
@@ -489,7 +490,7 @@ def test_cached_ivf_index_builds_once_and_invalidates_on_content(
     import os
     import shutil
 
-    monkeypatch.setenv("SMS_IVF_CACHE", os.path.join(str(tmp_path), "cache"))
+    monkeypatch.setattr(io, "_RUN_ROOT", os.path.join(str(tmp_path), "cache"))
     src = os.path.join(str(tmp_path), "src.parquet")
     vecs = _clustered(spark, 100, seed=17)
     vecs.write.parquet(src)
@@ -935,49 +936,6 @@ def test_idbloom_union_happens_before_cells_overwrite(
     )
 
 
-def test_cached_ivf_index_cleanup_spares_fresh_siblings(
-    spark, tmp_path, monkeypatch
-):
-    """r12 ADVICE (low): stale-sibling cleanup must not delete a
-    same-prefix store whose .fp marker is fresh (a concurrent session
-    may be probing it); siblings older than SMS_IVF_CACHE_TTL_S age
-    out."""
-    import os
-
-    root = os.path.join(str(tmp_path), "cache")
-    monkeypatch.setenv("SMS_IVF_CACHE", root)
-    src = os.path.join(str(tmp_path), "src.parquet")
-    _clustered(spark, 80, seed=17).write.parquet(src)
-
-    def candidates():
-        return spark.read.parquet(src)
-
-    similarity.cached_ivf_index(
-        spark, src, candidates, variant="ttl", n_lists=4, seed=40
-    )
-    # fabricate two same-prefix siblings: one fresh, one beyond the TTL
-    fresh = os.path.join(root, "ttl_4_40_deadbeefdeadbeef")
-    stale = os.path.join(root, "ttl_4_40_feedfacefeedface")
-    for d in (fresh, stale):
-        os.makedirs(d)
-        with open(d + ".fp", "w") as f:
-            f.write("sentinel")
-    old = os.path.getmtime(stale + ".fp") - 7200
-    os.utime(stale + ".fp", (old, old))
-    # force a rebuild pass (content change -> cleanup runs)
-    import shutil
-
-    shutil.rmtree(src)
-    _clustered(spark, 90, seed=23).write.parquet(src)
-    similarity.cached_ivf_index(
-        spark, src, candidates, variant="ttl", n_lists=4, seed=40
-    )
-    assert os.path.isdir(fresh)  # fresh sibling survived
-    assert os.path.exists(fresh + ".fp")
-    assert not os.path.isdir(stale)  # aged-out sibling removed
-    assert not os.path.exists(stale + ".fp")
-
-
 def test_cosine_pandas_udf_seq_bit_identical_to_hof(spark):
     """r12 judge item #2's parity gate: the sequential-fold Arrow
     cosine must be BIT-identical (not merely close) to the V.cosine
@@ -1117,8 +1075,7 @@ def test_cache_key_includes_build_params(spark, tmp_path, monkeypatch):
     serving the stale frame under an unchanged variant name."""
     import os
 
-    root = os.path.join(str(tmp_path), "cache")
-    monkeypatch.setenv("SMS_IVF_CACHE", root)
+    monkeypatch.setattr(io, "_RUN_ROOT", os.path.join(str(tmp_path), "cache"))
     src = os.path.join(str(tmp_path), "src.parquet")
     _clustered(spark, 40, seed=17).write.parquet(src)
 
@@ -1160,8 +1117,7 @@ def test_drain_cache_events_reports_build_then_hit(spark, tmp_path, monkeypatch)
     plan-metric provenance."""
     import os
 
-    root = os.path.join(str(tmp_path), "cache")
-    monkeypatch.setenv("SMS_IVF_CACHE", root)
+    monkeypatch.setattr(io, "_RUN_ROOT", os.path.join(str(tmp_path), "cache"))
     src = os.path.join(str(tmp_path), "src.parquet")
     _clustered(spark, 40, seed=17).write.parquet(src)
     similarity.drain_cache_events()  # clear anything earlier tests left
@@ -1179,30 +1135,30 @@ def test_drain_cache_events_reports_build_then_hit(spark, tmp_path, monkeypatch)
 
 
 def test_default_cache_root_is_session_scoped(monkeypatch):
-    """r15 judge item #1: without an explicit SMS_IVF_CACHE override the
-    fingerprint caches live in a PER-PROCESS tempdir (removed at exit),
-    never a fixed cross-run /tmp path — every bench/oracle invocation
-    rebuilds its IVF templates and eval frames from the parquet inputs."""
+    """The fingerprint caches live under a PER-PROCESS
+    root (``io.run_dir``, removed at exit), never a fixed cross-run path
+    — every bench/oracle invocation rebuilds its IVF templates and eval
+    frames from the parquet inputs."""
     import os
-
     import shutil
+    import tempfile
 
-    monkeypatch.delenv("SMS_IVF_CACHE", raising=False)
-    monkeypatch.setattr(similarity, "_SESSION_CACHE_ROOT", None)
+    monkeypatch.setattr(io, "_RUN_ROOT", None)
     roots = []
     try:
-        root = similarity._session_cache_root()
+        root = io.run_dir()
         roots.append(root)
-        # a fresh mkdtemp under the system tempdir, not a well-known path
-        assert os.path.basename(root).startswith("sms_ivf_session_")
-        assert root != "/tmp/sms_ivf_cache"
+        # a fresh mkdtemp under TMPDIR, not a well-known path
+        assert os.path.dirname(root) == tempfile.gettempdir()
+        assert os.path.basename(root).startswith("smss_run_")
         assert os.path.isdir(root)
         # stable within the process (later consumers hit the same store)
-        assert similarity._session_cache_root() == root
+        assert io.run_dir() == root
+        assert io.run_dir("a", "b") == os.path.join(root, "a", "b")
         # a second process would resolve a DIFFERENT root: the name
         # embeds mkdtemp's per-call randomness, nothing run-invariant
-        monkeypatch.setattr(similarity, "_SESSION_CACHE_ROOT", None)
-        root2 = similarity._session_cache_root()
+        monkeypatch.setattr(io, "_RUN_ROOT", None)
+        root2 = io.run_dir()
         roots.append(root2)
         assert root2 != root
     finally:

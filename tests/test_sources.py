@@ -293,3 +293,115 @@ def test_compact_recovers_from_crashed_prior_run(spark, tmp_path):
     assert compact_parquet_dir(spark, d) == 1
     assert {r.k for r in spark.read.parquet(d).collect()} == {1, 2}
     assert not os.path.exists(d + ".old")
+
+
+def _write(path: str, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
+
+
+def test_staged_dir_builds_once_then_rebuilds_on_touched_source(
+    tmp_path, monkeypatch
+):
+    """One build per (store, source content): later calls hit the same
+    dir; a touched source rebuilds into a new dir and removes the old."""
+    monkeypatch.setattr(io, "_RUN_ROOT", str(tmp_path / "run"))
+    src = str(tmp_path / "src.txt")
+    _write(src, "v1")
+    builds = []
+
+    def build(d):
+        builds.append(d)
+        os.makedirs(d)
+        _write(os.path.join(d, "copy"), open(src).read())
+
+    io.drain_cache_events()
+    d1 = io.staged_dir("store", src, build)
+    assert open(os.path.join(d1, "copy")).read() == "v1"
+    assert io.staged_dir("store", src, build) == d1
+    assert len(builds) == 1
+    assert io.drain_cache_events() == [("store", "build"), ("store", "hit")]
+
+    _write(src, "v2, longer")
+    d2 = io.staged_dir("store", src, build)
+    assert d2 != d1 and len(builds) == 2
+    assert open(os.path.join(d2, "copy")).read() == "v2, longer"
+    assert not os.path.exists(d1)  # the earlier fingerprint's dir is gone
+    # a different key is a different fingerprint of the same store
+    d3 = io.staged_dir("store", src, build, key="k")
+    assert d3 != d2 and not os.path.exists(d2)
+    assert io.drain_cache_events() == [("store", "build"), ("store", "build")]
+
+
+def test_staged_dir_failed_build_leaves_no_marker(tmp_path, monkeypatch):
+    monkeypatch.setattr(io, "_RUN_ROOT", str(tmp_path / "run"))
+    src = str(tmp_path / "src.txt")
+    _write(src, "x")
+    calls = []
+
+    def failing(d):
+        calls.append(d)
+        os.makedirs(d)
+        raise RuntimeError("build failed")
+
+    import pytest
+
+    with pytest.raises(RuntimeError):
+        io.staged_dir("store", src, failing)
+    d = io.staged_dir("store", src, calls.append)
+    assert calls == [d, d]  # rebuilt, not served half-built
+    io.drain_cache_events()
+
+
+def test_run_root_is_removed_at_exit(tmp_path):
+    """A process that stages a store leaves nothing under its TMPDIR."""
+    import subprocess
+    import sys
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    src = str(tmp_path / "src.txt")
+    _write(src, "x")
+    code = (
+        "import os\n"
+        "from spark_ml_showcase_spark.sources import io\n"
+        "sink = io.run_dir('sink')\n"
+        "os.makedirs(sink)\n"
+        "open(os.path.join(sink, 'f'), 'w').close()\n"
+        f"d = io.staged_dir('s', {src!r}, os.makedirs)\n"
+        "assert os.path.isdir(d) and d.startswith(os.environ['TMPDIR'])\n"
+        "print(io.drain_cache_events())\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp), PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=repo,
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert out.strip() == "[('s', 'build')]"
+    assert os.listdir(tmp) == []
+
+
+def test_package_has_no_fixed_scratch_roots():
+    """Every scratch path goes through ``io.run_dir`` (one per-process
+    root under TMPDIR, removed at exit): no fixed /tmp roots, no
+    gettempdir() roots, no cache-root overrides — anything else would
+    let computed state survive into the next run."""
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "spark_ml_showcase_spark",
+    )
+    banned = re.compile(
+        r"/tmp/|gettempdir\(|SMS_IVF_CACHE|fp_cache_ok|fp_record|base_dir"
+    )
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                p = os.path.join(root, f)
+                for n, line in enumerate(open(p, encoding="utf-8"), 1):
+                    if banned.search(line):
+                        hits.append(f"{os.path.relpath(p, pkg)}:{n}: {line.strip()}")
+    assert hits == []
