@@ -101,43 +101,17 @@ def _perm_constants(k: int, seed: int = 40) -> list[tuple[int, int]]:
     return [(int(x), int(y)) for x, y in zip(a, b)]
 
 
-def minhash_signature(shingle_col: Column, k: int = 32) -> Column:
-    """k-permutation MinHash signature as array<bigint>. NULL when the
-    shingle set is empty (matching ``_minhash_signatures_agg``, which
-    drops empty docs — neither form emits a signature for them).
-
-    Column-expression form (composable; per-row higher-order functions —
-    NOT codegen'd). The ``minhash_near_dup`` operator uses the faster
-    explode→hash-aggregate formulation; both produce identical values
-    on every non-empty shingle set.
-
-    NB the transform lambdas are one-arg closures; a `lambda s, i=i:`
-    would match PySpark's TWO-argument (element, index) form and silently
-    hash with the array index."""
-    base = F.transform(
-        shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))
-    )
-
-    def min_i(a: int, b: int) -> Column:
-        return F.array_min(
-            F.transform(
-                base, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MH_PRIME))
-            )
-        )
-
-    sig = F.array(*[min_i(a, b) for a, b in _perm_constants(k)])
-    return F.when(F.size(shingle_col) > 0, sig)
-
-
 def _minhash_signatures_agg(
     df: DataFrame, id_col: str, text_col: str, *, ngram: int, k: int
 ) -> DataFrame:
     """(id, _sig array<bigint>) via explode → groupBy(id).agg(k mins).
 
-    Same values as ``minhash_signature``, but the whole pipeline is
-    whole-stage-codegen'd: one narrow explode projection, then a hash
-    aggregate with MAP-SIDE partial mins — the shuffle carries k longs
-    per doc, not the shingle set. This is the 100 TB path."""
+    k-permutation MinHash; docs with an empty shingle set emit no row.
+    The whole pipeline is whole-stage-codegen'd: one narrow explode
+    projection, then a hash aggregate with MAP-SIDE partial mins — the
+    shuffle carries k longs per doc, not the shingle set. This is the
+    100 TB path. ``tests/test_dedup.py`` keeps a per-row higher-order
+    function reference that must give identical values."""
     # repartition first: a small single-file scan is ONE partition, which
     # would serialize the (expensive) shingle explode onto one core. A
     # round-robin shuffle of raw docs is cheap; the explode then fans out

@@ -680,6 +680,7 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ml_showcase_spark.functions import similarity
     from spark_ml_showcase_spark.functions import vectors as V
     from spark_ml_showcase_spark.operators.drift import round_like_duckdb
+    from spark_ml_showcase_spark.sources.catalog import Catalog
     from spark_ml_showcase_spark.streaming.events import (
         _as_stream_dir,
         _stream_session,
@@ -691,9 +692,7 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(_as_stream_dir(f"{sf_dir}/embeddings.parquet"))
     # static dimension on the STREAM's session (memory-sink tables and
     # stream-static joins are session-scoped)
-    docs = s2.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
+    docs = Catalog(s2, sf_dir).documents.select("doc_id", "source")
     # broadcast the dimension: a stream-static sort-merge would
     # re-shuffle the static side every micro-batch
     j = stream.join(F.broadcast(docs), stream.vec_id == docs.doc_id).select(

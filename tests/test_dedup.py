@@ -4,9 +4,31 @@ bounds."""
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from spark_ml_showcase_spark.operators import dedup
+
+
+def minhash_signature(shingle_col: Column, k: int = 32) -> Column:
+    """Reference k-permutation MinHash signature as array<bigint>, one
+    row at a time with higher-order functions (not codegen'd). NULL when
+    the shingle set is empty; ``dedup._minhash_signatures_agg`` drops
+    those docs and must give the same values on every other one.
+
+    NB the transform lambdas are one-arg closures; a `lambda s, i=i:`
+    would match PySpark's TWO-argument (element, index) form and silently
+    hash with the array index."""
+    prime = F.lit(dedup._MH_PRIME)
+    base = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), prime))
+
+    def min_i(a: int, b: int) -> Column:
+        return F.array_min(
+            F.transform(base, lambda h: F.pmod(F.lit(a) * h + F.lit(b), prime))
+        )
+
+    sig = F.array(*[min_i(a, b) for a, b in dedup._perm_constants(k)])
+    return F.when(F.size(shingle_col) > 0, sig)
 
 
 def _docs(spark):
@@ -83,7 +105,7 @@ def test_minhash_signature_uses_independent_seeds(spark):
     from spark_ml_showcase_spark.functions import text as T
 
     sig = df.select(
-        dedup.minhash_signature(T.shingles("text", 1), 16).alias("s")
+        minhash_signature(T.shingles("text", 1), 16).alias("s")
     ).collect()
     # same unigram set → identical signatures regardless of order
     assert sig[0].s == sig[1].s
@@ -100,7 +122,7 @@ def test_signature_forms_agree(spark):
     col_form = {
         r.doc_id: r.sig
         for r in df.select(
-            "doc_id", dedup.minhash_signature(T.shingles("text", 3), 16).alias("sig")
+            "doc_id", minhash_signature(T.shingles("text", 3), 16).alias("sig")
         )
         .filter(F.size(T.shingles("text", 3)) > 0)
         .collect()

@@ -134,6 +134,110 @@ def test_catalog_events_ts_adapts_to_both_fixture_generations(spark, tmp_path):
     assert got["us"] == got["ns"] == want
 
 
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted in its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"catalog-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog schema memo test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _copy_table(tmp_path, name):
+    import shutil
+
+    from tests.conftest import SF_SMALL
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d, exist_ok=True)
+    shutil.copy(os.path.join(SF_SMALL, f"{name}.parquet"), d)
+    return d
+
+
+def test_catalog_second_read_reuses_schema_without_a_job(spark, tmp_path):
+    from spark_ml_showcase_spark.sources.catalog import Catalog
+
+    d = _copy_table(tmp_path, "nation")
+    first, jobs1 = _jobs_in(spark, lambda: Catalog(spark, d).table("nation"))
+    second, jobs2 = _jobs_in(spark, lambda: Catalog(spark, d).table("nation"))
+    assert jobs1 >= 1  # a new file: its schema is inferred by a job
+    assert jobs2 == 0
+    assert second.schema.json() == first.schema.json()
+    assert second.count() == first.count() == 25
+
+
+def test_catalog_rewritten_file_infers_again(spark, tmp_path):
+    """The memo keys on file identity: events.parquet rewritten in the
+    SAME directory, µs then ns, still reads as the same instants."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_ml_showcase_spark.sources.catalog import Catalog
+
+    base = dt.datetime(2024, 5, 1, 8, 30)
+    instants = [base + dt.timedelta(hours=i) for i in range(3)]
+    want = {int(t.replace(tzinfo=dt.timezone.utc).timestamp()) for t in instants}
+    path = os.path.join(str(tmp_path), "events.parquet")
+    for unit in ("us", "ns"):
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(range(3), pa.int64()),
+                "ts": pa.array(instants, pa.timestamp(unit)),
+            }),
+            path,
+        )
+        ev = Catalog(spark, str(tmp_path)).events
+        assert str(ev.schema["ts"].dataType) == "TimestampType()", unit
+        secs = ev.select(F.col("ts").cast("long").alias("s")).collect()
+        assert {r.s for r in secs} == want, unit
+
+
+def _output_ids(df):
+    out = df._jdf.queryExecution().analyzed().output()
+    return {out.apply(i).exprId().id() for i in range(out.size())}
+
+
+def test_catalog_reads_are_fresh_relations(spark):
+    from spark_ml_showcase_spark.sources.catalog import Catalog
+    from tests.conftest import SF_SMALL
+
+    cat = Catalog(spark, SF_SMALL)
+    n1, n2 = cat.nation, cat.nation
+    assert _output_ids(n1).isdisjoint(_output_ids(n2))
+    a, b = n1.alias("a"), n2.alias("b")
+    pairs = a.join(b, F.col("a.n_regionkey") == F.col("b.n_regionkey")).select(
+        F.col("a.n_nationkey"), F.col("b.n_nationkey")
+    )
+    by_region = n1.groupBy("n_regionkey").count().collect()
+    assert pairs.count() == sum(r["count"] ** 2 for r in by_region)
+
+
+def test_catalog_changed_inference_conf_misses_memo(spark, tmp_path):
+    from spark_ml_showcase_spark.sources.catalog import Catalog
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf)
+    flipped = "false" if before == "true" else "true"
+    d = _copy_table(tmp_path, "region")
+    try:
+        _jobs_in(spark, lambda: Catalog(spark, d).region)
+        _, hit = _jobs_in(spark, lambda: Catalog(spark, d).region)
+        spark.conf.set(conf, flipped)
+        _, miss = _jobs_in(spark, lambda: Catalog(spark, d).region)
+        _, hit_again = _jobs_in(spark, lambda: Catalog(spark, d).region)
+    finally:
+        spark.conf.set(conf, before)
+    assert hit == 0 and miss >= 1 and hit_again == 0
+
+
 def test_compact_parquet_dir(spark, tmp_path):
     from spark_ml_showcase_spark.sources.io import compact_parquet_dir
 
@@ -404,4 +508,38 @@ def test_package_has_no_fixed_scratch_roots():
                 for n, line in enumerate(open(p, encoding="utf-8"), 1):
                     if banned.search(line):
                         hits.append(f"{os.path.relpath(p, pkg)}:{n}: {line.strip()}")
+    assert hits == []
+
+
+def test_base_tables_are_read_only_through_catalog():
+    """``Catalog.table`` is the one base-table resolver (its schema memo
+    has no bypass): no other package module batch-reads
+    ``{sf_dir}/<table>.parquet`` or ``os.path.join(sf_dir,
+    "<table>.parquet")``. Stream readers and staged-store reads go
+    through other paths and are exempt."""
+    import re
+
+    from spark_ml_showcase_spark.sources.catalog import TESTDATA_TABLES
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "spark_ml_showcase_spark",
+    )
+    table = "|".join(TESTDATA_TABLES)
+    raw_read = re.compile(
+        r"\.read(?:\s*\.\s*schema\([^()]*\))?\s*\.\s*parquet\(\s*(?:"
+        rf"f[\"']\{{[\w.]*sf_dir\}}/(?:{table})\.parquet"
+        rf"|(?:\w+\.)*join\(\s*[\w.]*sf_dir\s*,\s*[\"'](?:{table})\.parquet)"
+    )
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            p = os.path.join(root, f)
+            rel = os.path.relpath(p, pkg)
+            if not f.endswith(".py") or rel == os.path.join("sources", "catalog.py"):
+                continue
+            src = open(p, encoding="utf-8").read()
+            for m in raw_read.finditer(src):
+                n = src.count("\n", 0, m.start()) + 1
+                hits.append(f"{rel}:{n}: {m.group(0)}")
     assert hits == []
