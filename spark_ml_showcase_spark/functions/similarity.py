@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_ml_showcase_spark.functions import partitioning
 from spark_ml_showcase_spark.functions import vectors as V
 # drain_cache_events is re-exported: the bench drains store events here
 from spark_ml_showcase_spark.sources.io import (  # noqa: F401
@@ -71,20 +72,15 @@ def brute_force_topk(
         F.col(id_col).alias("cand_id"), as_double(vec_col).alias("_cv")
     )
     # the scoring stage (cross × broadcast + cosine + partial window)
-    # runs at the CANDIDATE scan's parallelism — a single-file parquet
-    # fixture is ONE partition, serializing the whole O(|q|·|c|) score
-    # pass on one core (measured: the 1.6 s single-task stage under
-    # rrf_fusion_ivf). Fan narrow scans out to the session's
-    # parallelism; at scale the corpus scan already has ≥ that many
-    # splits and this is a no-op — never a payload reshuffle (r15).
-    # ``widen=False`` opts out for MANY-small-call evidence legs (few
-    # query rows × a small corpus), where per-task Arrow/worker
-    # overhead exceeds the serial compute — measured +1.2 s on
-    # pca_quantized_regimes' four ≤20-query truth passes.
+    # runs at the CANDIDATE scan's parallelism (measured: the 1.6 s
+    # single-task stage under rrf_fusion_ivf), so narrow scans fan out
+    # to the session's parallelism. ``widen=False`` opts out for
+    # MANY-small-call evidence legs (few query rows × a small corpus),
+    # where per-task Arrow/worker overhead exceeds the serial compute —
+    # measured +1.2 s on pca_quantized_regimes' four ≤20-query truth
+    # passes.
     if widen:
-        par = candidates.sparkSession.sparkContext.defaultParallelism
-        if c.rdd.getNumPartitions() < par:
-            c = c.repartition(par)
+        c = partitioning.fan_out(c, partitioning.width(candidates.sparkSession))
     if vectorized == "seq":
         cos = cosine_pandas_udf_seq()("_qv", "_cv")
     elif vectorized:
@@ -290,7 +286,7 @@ def build_ivf_index(
         # one task — one file per cell per write (a 100 TB cell spans
         # multiple files only when its task count does)
         assigned = assigned.repartition(
-            min(n_lists, candidates.sparkSession.sparkContext.defaultParallelism),
+            partitioning.width(candidates.sparkSession, n_lists),
             "_cell",
         ).localCheckpoint()  # reused for the write AND the stats agg
         assigned.write.mode("overwrite").partitionBy("_cell").parquet(
@@ -835,7 +831,7 @@ def ivf_index_upsert(
         # materialization and the vacated-cell lookup are ONE job
         # instead of an eager-checkpoint job plus a collect.
         .repartition(
-            min(len(touched), spark.sparkContext.defaultParallelism),
+            partitioning.width(spark, len(touched)),
             "_cell",
         )
         .localCheckpoint(eager=False)
@@ -1028,11 +1024,7 @@ def ivf_index_upsert(
                     .alias("_cell"),
                 )
                 .repartition(
-                    min(
-                        2 * len(split_ok),
-                        spark.sparkContext.defaultParallelism,
-                    ),
-                    "_cell",
+                    partitioning.width(spark, 2 * len(split_ok)), "_cell"
                 )
                 # lineage already cut at final_assign's checkpoint, so
                 # the cells/-overwrite below is safe without another one

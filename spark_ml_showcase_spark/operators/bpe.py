@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_ml_showcase_spark.functions import partitioning
+
 # adjacent symbol pairs of one word: slice(syms, 1, n-1) is the
 # 1-based prefix syms[0..n-2]; transform's lambda index i is 0-based
 # and the [] subscript is 0-based too, so the partner of slice
@@ -113,13 +115,13 @@ def learn_bpe_merges(
     ``(rank, left, right, merged, freq)`` in learning order."""
     spark: SparkSession = docs.sparkSession
     vocab = _word_vocab(docs, text_col).localCheckpoint()
-    # size the ITERATION to the vocab, not the corpus: every round
-    # re-materializes the symbol arrays, and at distinct-word scale
-    # (thousands at test SFs, ~50k rows per partition at corpus scale)
-    # task-launch overhead dominates a 32-way layout 8 rounds deep
-    n_words = vocab.count()
-    parts = max(1, min(32, n_words // 50_000 + 1))
-    if vocab.rdd.getNumPartitions() > parts:
+    # size the ITERATION to the vocab, not the corpus: at distinct-word
+    # scale (thousands at test SFs) task-launch overhead dominates a
+    # session-wide layout 8 rounds deep
+    parts = partitioning.width(
+        spark, vocab.count(), partitioning.VOCAB_WORDS_PER_TASK
+    )
+    if partitioning.plan_width(vocab) > parts:
         vocab = vocab.coalesce(parts).localCheckpoint()
 
     # the loop keeps a CHECKPOINTED base vocabulary plus the list of

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from spark_ml_showcase_spark.functions.rounding import round_like_duckdb
 from pyspark.sql.window import Window
 
+from spark_ml_showcase_spark.functions import partitioning
 from spark_ml_showcase_spark.functions import text as T
 
 
@@ -101,64 +102,24 @@ def _perm_constants(k: int, seed: int = 40) -> list[tuple[int, int]]:
     return [(int(x), int(y)) for x, y in zip(a, b)]
 
 
-def _minhash_signatures_agg(
-    df: DataFrame, id_col: str, text_col: str, *, ngram: int, k: int
-) -> DataFrame:
-    """(id, _sig array<bigint>) via explode → groupBy(id).agg(k mins).
-
-    k-permutation MinHash; docs with an empty shingle set emit no row.
-    The whole pipeline is whole-stage-codegen'd: one narrow explode
-    projection, then a hash aggregate with MAP-SIDE partial mins — the
-    shuffle carries k longs per doc, not the shingle set. This is the
-    100 TB path. ``tests/test_dedup.py`` keeps a per-row higher-order
-    function reference that must give identical values."""
-    # repartition first: a small single-file scan is ONE partition, which
-    # would serialize the (expensive) shingle explode onto one core. A
-    # round-robin shuffle of raw docs is cheap; the explode then fans out
-    # in parallel. At 100 TB the scan has thousands of splits already and
-    # AQE coalesces — the repartition is still harmless (narrow input).
-    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    src = src.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    # Arrow-batched gram arrays — same strings as T.shingles, so the
-    # xxhash64-derived signature values are unchanged (see text module)
-    ex = src.select(
-        "_id", F.explode(T.shingle_array_udf(ngram)("_t")).alias("_s")
-    )
-    hashed = ex.select(
-        "_id", F.pmod(F.xxhash64("_s"), F.lit(_MH_PRIME)).alias("_h")
-    )
-    mins = hashed.groupBy("_id").agg(
-        *[
-            F.min(
-                F.pmod(F.lit(a) * F.col("_h") + F.lit(b), F.lit(_MH_PRIME))
-            ).alias(f"_m{i}")
-            for i, (a, b) in enumerate(_perm_constants(k))
-        ]
-    )
-    return mins.select(
-        "_id", F.array(*[F.col(f"_m{i}") for i in range(k)]).alias("_sig")
-    )
-
-
 def minhash_signature_np_udf(ngram: int = 3, k: int = 32, seed: int = 40):
     """Arrow-batched numpy MinHash: text → array<bigint> signature (NULL
     when the doc has < ``ngram`` tokens), the whole k-permutation min
     computed INSIDE the UDF.
 
-    This is the hot-path twin of ``_minhash_signatures_agg`` in the same
-    sense as ``winnow_fingerprint_udf``: signature VALUES differ (crc32
-    gram hashes here — xxhash64 has no Python twin), but every guarantee
-    MinHash gives is hash-agnostic — equal shingle sets ⇒ equal
-    signatures, P(position match) = Jaccard — so recall/precision
-    properties are identical. Never MIX the two forms in one comparison;
-    a pipeline picks one and sticks to it.
+    Gram hashes are crc32 (xxhash64 has no Python twin), so signature
+    VALUES differ from an xxhash64 column form of the same permutations
+    (``tests/test_dedup.py`` keeps one as a reference), but every
+    guarantee MinHash gives is hash-agnostic — equal shingle sets ⇒
+    equal signatures, P(position match) = Jaccard. Never MIX two hash
+    forms in one comparison; a pipeline picks one and sticks to it.
 
-    Why it exists (r8 profiling of the 200k-doc probe): the explode-agg
-    path ships every gram STRING over Arrow (~5.6M strings / 112 MB at
-    200k docs), explodes them, and shuffles 5.6M (id, hash) rows into a
-    32-way min aggregate. Here the same work is ONE narrow projection;
-    only k longs per doc cross Arrow, and NOTHING shuffles before
-    banding.
+    Why it exists (r8 profiling of the 200k-doc probe): the former
+    explode → groupBy(id) min-agg path shipped every gram STRING over
+    Arrow (~5.6M strings / 112 MB at 200k docs), exploded them, and
+    shuffled 5.6M (id, hash) rows into a 32-way min aggregate. Here the
+    same work is ONE narrow projection; only k longs per doc cross
+    Arrow, and NOTHING shuffles before banding.
 
     r9 re-profiling (judge item #3) split the inner loop: the per-gram
     ``" ".join`` + crc32-of-gram-string pass was ~50% of UDF time and
@@ -256,12 +217,11 @@ def minhash_signature_np_udf(ngram: int = 3, k: int = 32, seed: int = 40):
 def _minhash_signatures_np(
     df: DataFrame, id_col: str, text_col: str, *, ngram: int, k: int
 ) -> DataFrame:
-    """(id, _sig) via :func:`minhash_signature_np_udf` — same output
-    contract as ``_minhash_signatures_agg`` (zero-shingle docs dropped),
-    different (crc32-based) signature values. The banding/guard/join
-    stages downstream are value-agnostic."""
+    """(id, _sig) via :func:`minhash_signature_np_udf`, zero-shingle
+    docs dropped. The banding/guard/join stages downstream are
+    value-agnostic."""
     src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    src = src.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    src = src.repartition(partitioning.width(df.sparkSession))
     return (
         src.select("_id", minhash_signature_np_udf(ngram, k)("_t").alias("_sig"))
         .filter(F.col("_sig").isNotNull())
@@ -403,7 +363,7 @@ def minhash_near_dup(
             .distinct()
         )
         src = src.join(cand_ids, "_id", "left_semi")
-    sh = src.repartition(df.sparkSession.sparkContext.defaultParallelism).select(
+    sh = src.repartition(partitioning.width(df.sparkSession)).select(
         "_id", T.shingle_array_udf(ngram)("_t").alias("_sh")
     )
     verified = (
@@ -441,7 +401,7 @@ def ngram_jaccard_pairs(
     """
     sh = (
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .repartition(partitioning.width(df.sparkSession))
         .select("_id", T.shingles("_t", ngram).alias("_sh"))
         .filter(F.size("_sh") > 0)
     )
@@ -526,7 +486,7 @@ def _simhash_agg(
     ``bits`` conditional sums with map-side partial aggregation. Docs
     with no shingles (< ngram tokens) drop out (explode of empty)."""
     src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    src = src.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    src = src.repartition(partitioning.width(df.sparkSession))
     ex = src.select(
         "_id", F.explode(T.shingle_array_udf(ngram)("_t")).alias("_s")
     ).select("_id", F.xxhash64("_s").alias("_th"))
@@ -611,7 +571,7 @@ def winnow_overlap_pairs(
     shuffle key is a fixed-width bigint.
     """
     src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    src = src.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    src = src.repartition(partitioning.width(df.sparkSession))
     # numpy-vectorized fingerprint twin (hash values differ from the
     # T.winnow_fingerprints column form but the winnowing guarantee is
     # hash-agnostic; both sides of the join use THIS udf)
@@ -1033,7 +993,6 @@ def set_similarity_join(
     text_col: str = "text",
     threshold: float = 0.9,
     round_decimals: int = 6,
-    verify_rows_per_task: int = 100_000,
 ) -> DataFrame:
     """EXACT Jaccard-threshold self-join on token SETS via PREFIX
     FILTERING (the PPJoin family, Xiao et al. WWW'08) — the
@@ -1104,35 +1063,29 @@ def set_similarity_join(
     prefixed = ranked.select(
         "_id", F.explode(F.slice("_toks", 1, p)).alias("_pt")
     )
-    # WORK-AWARE width for the verify stage (r16, the triangle idiom):
-    # AQE coalesces the deduped candidate exchange by its MAP bytes —
-    # bare id pairs, ~3 MB at sf0.1 — leaving the exact
-    # array_intersect verify (the O(candidates) work of the whole
-    # join) at 2 post-shuffle tasks on 32 cores (measured: one 3.8 s
-    # 2-task stage of a ~4 s query). One bounded agg over the already
-    # checkpointed ranked table yields the candidate-incidence bound
-    # Σ_t c_t·(c_t−1)/2 over prefix tokens; width = one task per
-    # ``verify_rows_per_task`` incidences, capped at session
-    # parallelism — swept at sf0.1: width 1/5/9/18 gives wall
-    # 2.9/1.4/1.0/1.0 s at stage CPU 3.7/4.0/4.2/5.5 s, so ~100k
-    # incidences (~0.5 s tasks) takes the 2.9× wall win before the
-    # per-task overhead starts buying nothing — fixture
-    # scale keeps tasks big enough to amortize launch, cluster scale
-    # fans to the whole machine. The repartition sits AFTER the
-    # dedup, so the map-side partial aggregation keeps collapsing
-    # duplicate incidences before any shuffle (widening the dedup
-    # exchange itself measured 6× the stage CPU: every incidence rode
-    # the wire and the final agg un-partialed); only the slim distinct
-    # pairs pay the extra exchange.
-    par = docs.sparkSession.sparkContext.defaultParallelism
+    # work-sized verify stage (r16, the triangle idiom): AQE coalesces
+    # the deduped candidate exchange by its MAP bytes — bare id pairs,
+    # ~3 MB at sf0.1 — leaving the exact array_intersect verify (the
+    # O(candidates) work of the whole join) at 2 post-shuffle tasks on
+    # 32 cores (measured: one 3.8 s 2-task stage of a ~4 s query). One
+    # bounded agg over the already checkpointed ranked table yields the
+    # candidate-incidence bound Σ_t c_t·(c_t−1)/2 over prefix tokens.
+    # The repartition sits AFTER the dedup, so the map-side partial
+    # aggregation keeps collapsing duplicate incidences before any
+    # shuffle (widening the dedup exchange itself measured 6× the stage
+    # CPU: every incidence rode the wire and the final agg un-partialed);
+    # only the slim distinct pairs pay the extra exchange.
     st = (
         prefixed.groupBy("_pt")
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(F.sum(F.col("c") * (F.col("c") - F.lit(1))).alias("w2"))
         .first()
     )
-    incid = int(st.w2 or 0) // 2
-    width = max(1, min(par, -(-incid // max(1, verify_rows_per_task))))
+    width = partitioning.width(
+        docs.sparkSession,
+        int(st.w2 or 0) // 2,
+        partitioning.VERIFY_ROWS_PER_TASK,
+    )
     a, b = prefixed.alias("a"), prefixed.alias("b")
     cand_ids = (
         a.join(b, (F.col("a._pt") == F.col("b._pt"))
@@ -1185,7 +1138,7 @@ def _distinct_gram_sets(
         _gram_hashes_fn(ngram), "array<bigint>"
     ).asNondeterministic()
     return (
-        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        docs.repartition(partitioning.width(docs.sparkSession))
         .select(
             F.col(id_col).alias("_id"), udf(F.col(text_col)).alias("_grams")
         )
@@ -1425,7 +1378,7 @@ def substring_dup_spans(
         _gram_hash_seq_fn(span_tokens), "array<bigint>"
     ).asNondeterministic()
     grams = (
-        df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        df.repartition(partitioning.width(df.sparkSession))
         .select(
             F.col(id_col).alias("_id"),
             F.posexplode(udf(F.col(text_col))).alias("_off0", "gh"),

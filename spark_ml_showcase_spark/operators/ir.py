@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_ml_showcase_spark.functions import partitioning
+
 
 def _bigram_tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, gram, tf): whitespace-token bigrams with per-doc term
@@ -329,9 +331,7 @@ def phrase_search(
         udf = F.pandas_udf(
             _gram_hash_seq_fn(length), "array<bigint>"
         ).asNondeterministic()  # keep the posexplode filter above the scan
-        grams = docs.repartition(
-            spark.sparkContext.defaultParallelism
-        ).select(
+        grams = docs.repartition(partitioning.width(spark)).select(
             F.col(id_col).alias("_id"),
             F.posexplode(udf(F.col(text_col))).alias("_off0", "gh"),
         )

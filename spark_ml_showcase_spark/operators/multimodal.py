@@ -30,6 +30,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_ml_showcase_spark.functions import partitioning
+
 FEATURE_SCHEMA = (
     "id bigint, n_bytes bigint, width int, height int, feat array<float>"
 )
@@ -49,12 +51,9 @@ def attach_binary(
         F.lit("application/octet-stream").alias("media_type"),
         F.octet_length(payload).alias("n_bytes"),
     )
-    # small single-file sources scan as ONE partition, which would
-    # serialize every downstream mapInPandas batch onto one core;
-    # repartition unconditionally — a no-op-cost shuffle at this width
-    # beats probing partition counts through a plan→RDD conversion.
-    sc = df.sparkSession.sparkContext
-    return out.repartition(sc.defaultParallelism)
+    # fans the downstream mapInPandas batches out; unconditional — a
+    # no-op-cost shuffle at this width beats probing the frame's width
+    return out.repartition(partitioning.width(df.sparkSession))
 
 
 def encode_bmp(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
@@ -312,8 +311,6 @@ def synthesize_bmp(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """
     import pandas as pd
 
-    sc = df.sparkSession.sparkContext
-
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             ids = [int(i) for i in pdf["id"]]
@@ -331,7 +328,9 @@ def synthesize_bmp(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    src = df.select(F.col(id_col).alias("id")).repartition(sc.defaultParallelism)
+    src = df.select(F.col(id_col).alias("id")).repartition(
+        partitioning.width(df.sparkSession)
+    )
     return src.mapInPandas(run, "id bigint, payload binary")
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_ml_showcase_spark.functions import similarity, text as TX, urls
+from spark_ml_showcase_spark.functions import partitioning, similarity, text as TX, urls
 from spark_ml_showcase_spark.operators import (
     boilerplate,
     drift,
@@ -857,11 +857,10 @@ def _lang_hits_sql(lang: str) -> str:
     """,
 )
 def text_quality_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # repartition: single-file scan = one partition, and the quality/
-    # lang-ID higher-order expressions are the interpreted slow path —
-    # fan them out across cores
+    # the quality/lang-ID higher-order expressions are the interpreted
+    # slow path — fan them out across cores
     docs = Catalog(spark, sf_dir).documents.repartition(
-        spark.sparkContext.defaultParallelism
+        partitioning.width(spark)
     )
     return docs.select(
         "doc_id",

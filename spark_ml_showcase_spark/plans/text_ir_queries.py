@@ -231,16 +231,13 @@ def npmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
     # raw text widened BEFORE the tokenize: both count legs (unigram
     # and bigram) ran their split+explode+partial-agg at the scan's
-    # width — ONE task on the single-file fixture, measured as three
-    # ~2 s serial stages of a 4.3 s query (r16 stage profile). The
-    # widened exchange is IDENTICAL under both legs (no leg-specific
-    # filter below it — the old size>=2 pre-filter pushed into one
-    # leg's scan and broke reuse; explode of an empty pair array drops
-    # the row anyway), so the corpus text shuffles once and every
-    # downstream stage runs wide.
-    t = widen_narrow_scan(
-        docs.select("text"), bytes_per_task=32 << 10
-    ).select(toks.alias("t"))
+    # width, measured as three ~2 s serial stages of a 4.3 s query (r16
+    # stage profile). The widened exchange is IDENTICAL under both legs
+    # (no leg-specific filter below it — the old size>=2 pre-filter
+    # pushed into one leg's scan and broke reuse; explode of an empty
+    # pair array drops the row anyway), so the corpus text shuffles
+    # once and every downstream stage runs wide.
+    t = widen_narrow_scan(docs.select("text")).select(toks.alias("t"))
     uni = t.select(F.explode("t").alias("tok")).groupBy("tok").agg(
         F.count(F.lit(1)).alias("c")
     )

