@@ -10,6 +10,11 @@ post-shuffle stages), so the fix is an explicit repartition BEFORE the
 expensive projection. An explicit width is also exempt from AQE
 coalescing, which is why a post-shuffle stage whose work is far larger
 than its input bytes (wedge generation, pair verification) sets one.
+Where the repartition is also the exchange of a join whose children
+are all shuffles, EnsureRequirements re-plans any width below
+``spark.sql.shuffle.partitions`` at that width, so a narrower
+work-derived width never runs there: ``triangle_count`` names the
+session's width.
 
 Why work-derived. More tasks is not free: r15's triangle verdict and
 an r16 A/B both showed fixture-scale stages losing the parallelism win
@@ -25,10 +30,18 @@ scan's size statistics, a list's length — the width is one task per
   at sf0.1, width 1/5/9/18 gave 2.9/1.4/1.0/1.0 s at stage CPU
   3.7/4.0/4.2/5.5 s, so ~0.5 s tasks take the wall win before extra
   tasks buy nothing;
-- ``WEDGES_PER_TASK``: triangle wedges per task;
 - ``VOCAB_WORDS_PER_TASK``: BPE vocabulary words per partition — each
   merge round re-materializes the symbol arrays, so the loop is sized
-  to the vocab, not the corpus.
+  to the vocab, not the corpus;
+- ``STREAM_STATE_BYTES_PER_TASK``: stream source bytes per state
+  partition. Every state-store instance commits every micro-batch, a
+  fixed cost per partition, while join, dedup and Python-stateful work
+  grows with the data. Swept on 4 cores at widths 1/2/4: on 0.2 MB of
+  events width 1 was best or tied on all seven event streams (summed
+  state commit 26-205 ms against 209-1155 ms at 4); on 2 MB the
+  ``applyInPandasWithState`` totals took 6.4/4.5/3.6 s while the
+  commit-bound streams lost 0.2-0.6 s at 4; on 11.7 MB the interval
+  join took 26/15/7-16 s. 1 MiB gives widths 1, 2 and 4 there.
 
 Why capped. The cap is the session's parallelism
 (``spark.default.parallelism``): more tasks than slots only queue. At
@@ -42,8 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 SCAN_BYTES_PER_TASK = 32 << 10
 VERIFY_ROWS_PER_TASK = 100_000
-WEDGES_PER_TASK = 1_000_000
 VOCAB_WORDS_PER_TASK = 50_000
+STREAM_STATE_BYTES_PER_TASK = 1 << 20
 
 
 def width(spark: SparkSession, work: int | None = None, per_task: int = 1) -> int:

@@ -31,6 +31,7 @@ from spark_ml_showcase_spark.sources.io import (  # noqa: F401
     drain_cache_events,
     staged_dir,
 )
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 def as_double(col: str | Column) -> Column:
@@ -274,8 +275,8 @@ def build_ivf_index(
     centroids = [
         (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
     ]
-    cent_df = candidates.sparkSession.createDataFrame(
-        centroids, "cell int, centroid array<double>"
+    cent_df = local_frame(
+        candidates.sparkSession, centroids, "cell int, centroid array<double>"
     )
     if index_dir is not None:
         import os
@@ -793,7 +794,8 @@ def ivf_index_upsert(
     stale_cells = {int(r._cell) for r in cell_counts if r.n_stale}
     touched = sorted(set(added) | stale_cells)
     if not touched:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "cell int, n_before bigint, n_added bigint, n_after bigint, "
             "drift double, action string, new_cells array<int>",
@@ -944,7 +946,8 @@ def ivf_index_upsert(
 
         def _center_frame():
             return F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(c, v[0], v[1]) for c, v in sorted(centers.items())],
                     "_cell int, _c0 array<double>, _c1 array<double>",
                 )
@@ -1006,7 +1009,8 @@ def ivf_index_upsert(
             for c in split_ok:
                 new_cells_of[c] = [next_cell, next_cell + 1]
                 next_cell += 2
-            id_map = spark.createDataFrame(
+            id_map = local_frame(
+                spark,
                 [
                     (c, new_cells_of[c][0], new_cells_of[c][1])
                     for c in split_ok
@@ -1040,8 +1044,8 @@ def ivf_index_upsert(
                 shutil.rmtree(
                     os.path.join(cells_dir, f"_cell={c}"), ignore_errors=True
                 )
-            spark.createDataFrame(
-                sorted(cent_rows.items()), "cell int, centroid array<double>"
+            local_frame(
+                spark, sorted(cent_rows.items()), "cell int, centroid array<double>"
             ).repartition(1).write.mode("overwrite").parquet(
                 os.path.join(index_dir, "centroids")
             )
@@ -1063,8 +1067,8 @@ def ivf_index_upsert(
         for c in to_split:
             del stats[c]
         stats.update(split_after)
-    spark.createDataFrame(
-        sorted(stats.items()), "cell int, n_at_train bigint"
+    local_frame(
+        spark, sorted(stats.items()), "cell int, n_at_train bigint"
     ).repartition(1).write.mode("overwrite").parquet(stats_dir)
 
     report = [
@@ -1079,7 +1083,8 @@ def ivf_index_upsert(
         )
         for c in touched
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         report,
         "cell int, n_before bigint, n_added bigint, n_after bigint, "
         "drift double, action string, new_cells array<int>",

@@ -17,6 +17,7 @@ from pyspark.ml.evaluation import (
 )
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 def binary_auc(
@@ -104,4 +105,4 @@ def feature_importances_df(
     else:
         vec = model.coefficients.toArray()
     rows = [(name, float(v)) for name, v in zip(feature_names, vec)]
-    return spark.createDataFrame(rows, "feature string, importance double")
+    return local_frame(spark, rows, "feature string, importance double")

@@ -9,7 +9,7 @@ features with a zero-skewed count target (`Claims_Prediction.py:24-38`),
 ratings/movies = user×item ratings with epoch timestamps and
 pipe-delimited genres (`als_clustering_analysis.py:28-35,138`).
 
-All generators are driver-side numpy → ``spark.createDataFrame`` —
+All generators are driver-side numpy → ``sources.local`` frames —
 fixture sizes are intentionally FIXED (they model the reference's
 workloads, not the scale-factor tables), so registered ml_* queries have
 bounded runtime at any sf.
@@ -20,6 +20,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from spark_ml_showcase_spark.sources.local import local_frame, pandas_frame
 
 HIGGS_FEATURES = [f"f{i}" for i in range(1, 29)]
 
@@ -38,7 +40,7 @@ def higgs(spark: SparkSession, n: int = 2000, seed: int = 40) -> DataFrame:
     feats = rng.randn(n, 28) + shift
     pdf = pd.DataFrame(feats, columns=HIGGS_FEATURES)
     pdf.insert(0, "label", label.astype(float))
-    return spark.createDataFrame(pdf)
+    return pandas_frame(spark, pdf)
 
 
 def claims(spark: SparkSession, n: int = 5000, seed: int = 40) -> DataFrame:
@@ -69,7 +71,7 @@ def claims(spark: SparkSession, n: int = 5000, seed: int = 40) -> DataFrame:
             "Region": rng.choice(["R11", "R24", "R52", "R82", "R93"], n),
         }
     )
-    return spark.createDataFrame(pdf)
+    return pandas_frame(spark, pdf)
 
 
 def ratings(
@@ -94,7 +96,7 @@ def ratings(
     pdf = pd.DataFrame(
         {"userId": user, "movieId": movie, "rating": rating, "timestamp": ts[order]}
     )
-    return spark.createDataFrame(pdf)
+    return pandas_frame(spark, pdf)
 
 
 def movies(spark: SparkSession, n_movies: int = 100, seed: int = 40) -> DataFrame:
@@ -106,4 +108,4 @@ def movies(spark: SparkSession, n_movies: int = 100, seed: int = 40) -> DataFram
         k = rng.randint(1, 4)
         gs = rng.choice(_GENRES, size=k, replace=False)
         rows.append((str(m), f"Movie {m}", "|".join(sorted(gs))))
-    return spark.createDataFrame(rows, "movieId string, title string, genres string")
+    return local_frame(spark, rows, "movieId string, title string, genres string")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_ml_showcase_spark.functions import partitioning
+from spark_ml_showcase_spark.sources.local import local_frame
 
 # adjacent symbol pairs of one word: slice(syms, 1, n-1) is the
 # 1-based prefix syms[0..n-2]; transform's lambda index i is 0-based
@@ -165,7 +166,8 @@ def learn_bpe_merges(
             ).localCheckpoint()
             pending = []
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rules, "rank bigint, left string, right string, merged string, freq bigint"
     )
 

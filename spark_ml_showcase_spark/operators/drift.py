@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from spark_ml_showcase_spark.functions.rounding import (  # noqa: E402
     round_like_duckdb,
 )
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 def drift_report(j: DataFrame, *, group_col: str = "source") -> DataFrame:
@@ -248,7 +249,7 @@ def drift_gated_append(
             ]
             + [T.StructField("admitted", T.LongType())]
         )
-        return version, spark.createDataFrame([], schema)
+        return version, local_frame(spark, [], schema)
     tagged = base.select(
         F.col(group_col).alias(group_col),
         F.lit("baseline").alias("w"),

@@ -206,13 +206,11 @@ def triangle_count(
     merge-hinted in BOTH regimes: broadcasting an O(m) side there
     buys nothing (measured 2× SLOWER at sf0.1 — it serializes the
     probe through the checkpoint's partitioning) and pinning it stops
-    AQE from flipping strategies run to run. The stats driving both
-    decisions — edge count for the broadcast, the EXACT wedge workload
-    Σ c·(c−1)/2 for the wedge-stage width (``functions.partitioning``)
-    — ride ONE bounded agg over the localCheckpointed list, fronting the
-    materialization the joins would trigger anyway. The threshold default (~2M rows ≈
-    100 MB of (src, dst, dst_k) structs) is the conventional
-    executor-safe broadcast ceiling.
+    AQE from flipping strategies run to run. The edge count driving the
+    broadcast decision is ONE count over the localCheckpointed list,
+    fronting the materialization the joins would trigger anyway. The
+    threshold default (~2M rows ≈ 100 MB of (src, dst, dst_k) structs)
+    is the conventional executor-safe broadcast ceiling.
 
     Returns one row: ``(n_nodes, n_edges, n_triangles)``.
     """
@@ -246,24 +244,10 @@ def triangle_count(
     # rounds artifact of the MR recipe; MEMORY_AND_DISK, spills).
     # Measured at 20M hub-skewed edges: 11.4 s → 7.1 s (2.7M wedges/s).
     ).localCheckpoint(eager=False)
-    # the explicit-strategy decision (docstring): ONE bounded agg over
-    # the now-materialized oriented list yields the edge count (the
-    # broadcast decision) AND the exact wedge workload Σ c·(c−1)/2 over
-    # out-degrees (the width decision below) — same single job the
-    # plain count was, every other strategy pinned so AQE cannot flip
-    # plans run to run
-    st = (
-        oriented.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(
-            F.sum("c").alias("m"),
-            F.sum(F.col("c") * (F.col("c") - F.lit(1))).alias("w2"),
-        )
-        .first()
-    )
-    m = int(st.m or 0)
-    wedges = int(st.w2 or 0) // 2
-    small = m <= broadcast_max_edges
+    # the explicit-strategy decision (docstring): one count over the
+    # now-materialized oriented list, every other strategy pinned so
+    # AQE cannot flip plans run to run
+    small = oriented.count() <= broadcast_max_edges
     # explicit src-keyed repartition on BOTH wedge sides (r15): the
     # wedge stage does the O(m^1.5) work of the whole algorithm (wedge
     # generation + the broadcast closing probe + the partial count),
@@ -272,17 +256,14 @@ def triangle_count(
     # leaving the expensive expansion at a quarter of the machine
     # (measured: one 4.3 s 8-task stage of a 6 s query on 32 cores).
     # The repartition is keyed the same as the join so it IS the
-    # join's exchange (both sides reuse it); its width derives from the
-    # measured wedge workload (r15 verdict #2: a blind session-wide
-    # width lost 32 narrow fixture-sized tasks to scheduling overhead).
+    # join's exchange (both sides reuse it), a REPARTITION_BY_NUM
+    # shuffle AQE does not coalesce. It names the session's width;
+    # EnsureRequirements keeps that only if it is at least
+    # ``spark.sql.shuffle.partitions`` and otherwise re-plans both sides
+    # at the shuffle width, so the larger of the two runs.
     # Out-degrees are O(√m)-bounded by the orientation, so hash-by-src
     # cannot skew.
-    keyed = oriented.repartition(
-        partitioning.width(
-            oriented.sparkSession, wedges, partitioning.WEDGES_PER_TASK
-        ),
-        "src",
-    )
+    keyed = oriented.repartition(partitioning.width(oriented.sparkSession), "src")
     o1 = keyed.alias("o1")
     o2 = keyed.hint("merge").alias("o2")
     wedges = o1.join(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_ml_showcase_spark.functions import partitioning
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 def _bigram_tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -326,7 +327,7 @@ def phrase_search(
     out = None
     for length, plist in sorted(by_len.items()):
         ph = F.broadcast(
-            spark.createDataFrame(plist, "phrase string, gh bigint")
+            local_frame(spark, plist, "phrase string, gh bigint")
         )
         udf = F.pandas_udf(
             _gram_hash_seq_fn(length), "array<bigint>"

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from spark_ml_showcase_spark.functions.rounding import round_like_duckdb
 from pyspark.sql.functions import pandas_udf
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 def _gram_stats_fn(texts: pd.Series) -> pd.DataFrame:
@@ -183,7 +184,7 @@ def blocklist_filter(
         )
     spark = df.sparkSession
     term_df = F.broadcast(
-        spark.createDataFrame([(t,) for t in terms], "_term string")
+        local_frame(spark, [(t,) for t in terms], "_term string")
     )
     # distinct (id, token) before the join: duplicate tokens in one doc
     # must count once (array_intersect semantics), and deduping early

@@ -31,6 +31,7 @@ from spark_ml_showcase_spark.functions.rounding import round_like_duckdb
 from spark_ml_showcase_spark.plans import query
 from spark_ml_showcase_spark.sources import io
 from spark_ml_showcase_spark.sources.catalog import Catalog
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 # X1: exact dedup, keep-first by doc_id per normalized text. The Spark
@@ -1040,7 +1041,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact regression this report exists to surface — e.g. a broken
     # hash family) emits recall_at_10 = 0.0 instead of silently
     # disappearing from the report
-    methods = spark.createDataFrame([("lsh",), ("ivf",)], "method string")
+    methods = local_frame(spark, [("lsh",), ("ivf",)], "method string")
     truth_n = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     return (
         methods.join(hits, "method", "left")
@@ -1103,9 +1104,7 @@ def quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = truth.join(approx, ["query_id", "cand_id"]).groupBy("method").agg(
         F.count(F.lit(1)).alias("n_hit")
     )
-    methods = spark.createDataFrame(
-        [("int8_brute",), ("int8_ivf",)], "method string"
-    )
+    methods = local_frame(spark, [("int8_brute",), ("int8_ivf",)], "method string")
     truth_n = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     return (
         methods.join(hits, "method", "left")
@@ -1356,9 +1355,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term_idx")
         .agg(F.round(F.sum("w"), 4).alias("total_tfidf"))
     )
-    vocab_df = spark.createDataFrame(
-        list(enumerate(vocab)), "term_idx int, term string"
-    )
+    vocab_df = local_frame(spark, list(enumerate(vocab)), "term_idx int, term string")
     return (
         totals.join(F.broadcast(vocab_df), "term_idx")
         .select("term", "total_tfidf")
@@ -2367,7 +2364,7 @@ def learned_quality_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The Python UDTF surface (functions/udtfs.py) through the driver: the
-# LATERAL chunker registered in SQL and exercised end-to-end, oracle =
+# LATERAL chunker exercised end-to-end as a lateral join, oracle =
 # the SAME chunk arithmetic as chunk_documents_64_8 (the UDTF's
 # contract is bit-parity with the column-expression chunker, so the
 # row→many-rows Python table function is FULLY oracle-checked, not
@@ -2397,19 +2394,26 @@ def learned_quality_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udtf_lateral_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ml_showcase_spark.functions.udtfs import make_chunk_udtf
 
-    spark.udtf.register("chunk_text_udtf", make_chunk_udtf())
-    Catalog(spark, sf_dir).documents.filter(
-        (F.col("doc_id") >= 300) & (F.col("doc_id") < 500)
-    ).createOrReplaceTempView("_udtf_docs")
-    return spark.sql(
-        """
-        SELECT d.doc_id,
-               CAST(c.chunk_id AS BIGINT) AS chunk_id,
-               c.chunk_text,
-               CAST(c.n_tokens AS BIGINT) AS n_tokens
-        FROM _udtf_docs d, LATERAL chunk_text_udtf(d.text, 64, 8) c
-        ORDER BY d.doc_id, chunk_id
-        """
+    # a DataFrame lateral join over the UDTF object: the same plan as the
+    # SQL ``LATERAL`` form, with no function registered or view replaced
+    # in the caller's session
+    chunk = make_chunk_udtf()
+    docs = (
+        Catalog(spark, sf_dir)
+        .documents.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 500))
+        .alias("d")
+    )
+    return (
+        docs.lateralJoin(
+            chunk(F.col("d.text").outer(), F.lit(64), F.lit(8)).alias("c")
+        )
+        .select(
+            F.col("d.doc_id"),
+            F.col("c.chunk_id").cast("bigint").alias("chunk_id"),
+            F.col("c.chunk_text"),
+            F.col("c.n_tokens").cast("bigint").alias("n_tokens"),
+        )
+        .orderBy("d.doc_id", "chunk_id")
     )
 
 

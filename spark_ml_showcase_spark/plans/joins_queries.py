@@ -20,6 +20,7 @@ from spark_ml_showcase_spark.operators import joins
 from spark_ml_showcase_spark.functions.rounding import round_like_duckdb
 from spark_ml_showcase_spark.plans import query
 from spark_ml_showcase_spark.sources.catalog import Catalog
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 # As-of join: each purchase matched to the user's latest prior-or-equal
@@ -89,7 +90,7 @@ _BANDS = [
 )
 def range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Catalog(spark, sf_dir).events
-    bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
+    bands = local_frame(spark, _BANDS, "band string, lo double, hi double")
     joined = joins.range_join(
         ev, bands, "value", "lo", "hi", bucket_width=50.0
     )
@@ -127,7 +128,8 @@ def range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def salted_join_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Catalog(spark, sf_dir).events
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         # 'error' intentionally absent: the inner join must also FILTER
         [("click", 1.0), ("view", 0.5), ("purchase", 10.0), ("signup", 2.0)],
         "event_type string, weight double",

@@ -23,6 +23,7 @@ from spark_ml_showcase_spark import logs
 from spark_ml_showcase_spark.functions.rounding import round_like_duckdb
 from spark_ml_showcase_spark.plans import query
 from spark_ml_showcase_spark.sources import io
+from spark_ml_showcase_spark.sources.local import local_frame
 
 _DATA_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -301,7 +302,8 @@ def clf_png_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = de.count()
     top9_rows = top9.collect()
     rest = total - sum(r.n for r in top9_rows)
-    pie_df = spark.createDataFrame(
+    pie_df = local_frame(
+        spark,
         [(r.host, float(r.n)) for r in top9_rows] + [("Rest", float(rest))],
         "label string, n double",
     )
@@ -316,8 +318,8 @@ def clf_png_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("pie:"), "label").alias("artifact"),
         round_like_duckdb(F.col("n") / F.lit(float(total)), 6).alias("share"),
     )
-    heat = spark.createDataFrame(
-        [(f"heatmap:{hw}x{hh}:rgb8", 1.0)], "artifact string, share double"
+    heat = local_frame(
+        spark, [(f"heatmap:{hw}x{hh}:rgb8", 1.0)], "artifact string, share double"
     )
     return heat.unionByName(share_rows).orderBy("artifact")
 

@@ -15,6 +15,9 @@ check into minutes, and say so inline.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,12 +31,25 @@ from spark_ml_showcase_spark.ml import (
 )
 from spark_ml_showcase_spark.operators import splits
 from spark_ml_showcase_spark.plans import query
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
-def _higgs_split(spark: SparkSession):
+@contextmanager
+def _cached(*frames: DataFrame) -> Iterator[tuple[DataFrame, ...]]:
+    """``frames`` cached for the driver-side fits and evals of one
+    query, unpersisted when it is done: no cache outlives its query."""
+    cached = tuple(f.cache() for f in frames)
+    try:
+        yield cached
+    finally:
+        for f in cached:
+            f.unpersist()
+
+
+def _higgs_split(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     data = fixtures.higgs(spark, n=1500)
     train, test = splits.random_split(data, [0.7, 0.3], seed=40)
-    return data, train.cache(), test
+    return train, test
 
 
 # M1+M5+M6+M8: assembler→RF pipeline under a 3-fold CV grid
@@ -41,16 +57,18 @@ def _higgs_split(spark: SparkSession):
 # 27-point grid: ensembles.reference_rf_grid). One metrics row.
 @query("ml_rf_cv_higgs")
 def ml_rf_cv_higgs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, train, test = _higgs_split(spark)
+    train, test = _higgs_split(spark)
     model = ensembles.rf()
     pipe = features.pipeline([features.assembler(fixtures.HIGGS_FEATURES)], model)
     cv = ensembles.cross_validate(
         pipe, ensembles.small_rf_grid(model), num_folds=3, parallelism=8
     )
-    fitted = cv.fit(train)
+    with _cached(train) as (train,):
+        fitted = cv.fit(train)
     best = fitted.bestModel.stages[-1]
     pred = fitted.transform(test).select("prediction", "label")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "random_forest_cv",
@@ -68,12 +86,15 @@ def ml_rf_cv_higgs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # single fit at the reference grid's smallest point (maxIter=8, maxDepth=5).
 @query("ml_gbt_higgs")
 def ml_gbt_higgs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, train, test = _higgs_split(spark)
+    train, test = _higgs_split(spark)
     model = ensembles.gbt(maxIter=8, maxDepth=5, subsamplingRate=0.8)
     pipe = features.pipeline([features.assembler(fixtures.HIGGS_FEATURES)], model)
-    pred = pipe.fit(train).transform(test).select("prediction", "label")
+    with _cached(train) as (train,):
+        fitted = pipe.fit(train)
+    pred = fitted.transform(test).select("prediction", "label")
     prf = evaluate.precision_recall_f1(pred).first()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "gbt",
@@ -92,34 +113,35 @@ def ml_gbt_higgs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MulticlassMetrics path (higgs_ensemble_analysis.py:23-40). 4 rows (2×2).
 @query("ml_confusion_matrix_rf")
 def ml_confusion_matrix_rf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, train, test = _higgs_split(spark)
+    train, test = _higgs_split(spark)
     model = ensembles.rf(numTrees=10)
     pipe = features.pipeline([features.assembler(fixtures.HIGGS_FEATURES)], model)
-    pred = pipe.fit(train).transform(test)
-    return evaluate.confusion_matrix(pred)
+    with _cached(train) as (train,):
+        fitted = pipe.fit(train)
+    return evaluate.confusion_matrix(fitted.transform(test))
 
 
 # M19: featureImportances as a DataFrame (higgs_ensemble_analysis.py:46-50).
 # 28 rows, one per higgs feature.
 @query("ml_feature_importances_rf")
 def ml_feature_importances_rf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, train, _ = _higgs_split(spark)
+    train, _ = _higgs_split(spark)
     model = ensembles.rf(numTrees=10)
     pipe = features.pipeline([features.assembler(fixtures.HIGGS_FEATURES)], model)
-    fitted = pipe.fit(train).stages[-1]
+    with _cached(train) as (train,):
+        fitted = pipe.fit(train).stages[-1]
     return evaluate.feature_importances_df(
         spark, fitted, list(fixtures.HIGGS_FEATURES)
     )
 
 
-def _claims_split(spark: SparkSession):
+def _claims_split(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     data = regressions.derive_targets(fixtures.claims(spark, n=3000))
     # single-pass stratified split on the PP_ClaimNb strata — replaces the
     # reference's O(strata)-jobs loop (Claims_Prediction.py:43-54)
-    train, test = splits.stratified_split(
+    return splits.stratified_split(
         data, "PP_ClaimNb", regressions.NUMERIC_COLS, 0.7, seed=14
     )
-    return train.cache(), test.cache()
 
 
 # M2-M5 + M9-M11 + M16/M17: the full claims flow — indexer→OHE→scaler→
@@ -128,27 +150,27 @@ def _claims_split(spark: SparkSession):
 # train/test scores).
 @query("ml_claims_models")
 def ml_claims_models(spark: SparkSession, sf_dir: str) -> DataFrame:
-    train, test = _claims_split(spark)
     stages = features.indexed_ohe_scaled_stages(
         regressions.CATEGORICAL_COLS, regressions.NUMERIC_COLS
     )
     rows = []
-    for mtype, (label, metric) in regressions.MODEL_LABELS.items():
-        pipe = features.pipeline(stages, regressions.model(mtype, 0.001))
-        fitted = pipe.fit(train)
-        if metric == "rmse":
-            score_tr = evaluate.regression_metrics(
-                fitted.transform(train), label_col=label, metrics=("rmse",)
-            )["rmse"]
-            score_te = evaluate.regression_metrics(
-                fitted.transform(test), label_col=label, metrics=("rmse",)
-            )["rmse"]
-        else:
-            score_tr = evaluate.accuracy(fitted.transform(train), label_col=label)
-            score_te = evaluate.accuracy(fitted.transform(test), label_col=label)
-        rows.append((mtype, metric, round(score_tr, 4), round(score_te, 4)))
-    return spark.createDataFrame(
-        rows, "model string, metric string, train_score double, test_score double"
+    with _cached(*_claims_split(spark)) as (train, test):
+        for mtype, (label, metric) in regressions.MODEL_LABELS.items():
+            pipe = features.pipeline(stages, regressions.model(mtype, 0.001))
+            fitted = pipe.fit(train)
+            if metric == "rmse":
+                score_tr = evaluate.regression_metrics(
+                    fitted.transform(train), label_col=label, metrics=("rmse",)
+                )["rmse"]
+                score_te = evaluate.regression_metrics(
+                    fitted.transform(test), label_col=label, metrics=("rmse",)
+                )["rmse"]
+            else:
+                score_tr = evaluate.accuracy(fitted.transform(train), label_col=label)
+                score_te = evaluate.accuracy(fitted.transform(test), label_col=label)
+            rows.append((mtype, metric, round(score_tr, 4), round(score_te, 4)))
+    return local_frame(
+        spark, rows, "model string, metric string, train_score double, test_score double"
     )
 
 
@@ -156,32 +178,29 @@ def ml_claims_models(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the Poisson GLM. 5 rows, one per regParam option.
 @query("ml_claims_regparam_curve")
 def ml_claims_regparam_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    train, test = _claims_split(spark)
     stages = features.indexed_ohe_scaled_stages(
         regressions.CATEGORICAL_COLS, regressions.NUMERIC_COLS
     )
     rows = []
-    for reg in regressions.REG_PARAM_OPTIONS:
-        pipe = features.pipeline(stages, regressions.model("glm_poisson", reg))
-        fitted = pipe.fit(train)
-        rmse_tr = evaluate.regression_metrics(
-            fitted.transform(train), label_col="PP_ClaimNb", metrics=("rmse",)
-        )["rmse"]
-        rmse_te = evaluate.regression_metrics(
-            fitted.transform(test), label_col="PP_ClaimNb", metrics=("rmse",)
-        )["rmse"]
-        rows.append((float(reg), round(rmse_tr, 4), round(rmse_te, 4)))
-    return spark.createDataFrame(
-        rows, "reg_param double, train_rmse double, test_rmse double"
+    with _cached(*_claims_split(spark)) as (train, test):
+        for reg in regressions.REG_PARAM_OPTIONS:
+            pipe = features.pipeline(stages, regressions.model("glm_poisson", reg))
+            fitted = pipe.fit(train)
+            rmse_tr = evaluate.regression_metrics(
+                fitted.transform(train), label_col="PP_ClaimNb", metrics=("rmse",)
+            )["rmse"]
+            rmse_te = evaluate.regression_metrics(
+                fitted.transform(test), label_col="PP_ClaimNb", metrics=("rmse",)
+            )["rmse"]
+            rows.append((float(reg), round(rmse_tr, 4), round(rmse_te, 4)))
+    return local_frame(
+        spark, rows, "reg_param double, train_rmse double, test_rmse double"
     )
 
 
-def _als_fit(spark: SparkSession, max_iter: int):
+def _als_split(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     data = fixtures.ratings(spark, n_ratings=4000)
-    train, test = splits.temporal_split(data, "timestamp", "userId", 0.8, exact=True)
-    train = train.cache()
-    model = recommend.als(custom=True, rank=8, maxIter=max_iter).fit(train)
-    return train, test, model
+    return splits.temporal_split(data, "timestamp", "userId", 0.8, exact=True)
 
 
 # M12 + M17: ALS fit on a temporal 80% split, RMSE/MAE/MSE on the held-out
@@ -190,11 +209,14 @@ def _als_fit(spark: SparkSession, max_iter: int):
 # (custom=True)). 3 rows.
 @query("ml_als_metrics")
 def ml_als_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, test, model = _als_fit(spark, max_iter=8)
-    pred = model.transform(test)
-    metrics = evaluate.regression_metrics(pred, label_col="rating")
-    return spark.createDataFrame(
-        [(k, round(v, 4)) for k, v in metrics.items()], "metric string, value double"
+    train, test = _als_split(spark)
+    with _cached(train) as (train,):
+        model = recommend.als(custom=True, rank=8, maxIter=8).fit(train)
+        metrics = evaluate.regression_metrics(model.transform(test), label_col="rating")
+    return local_frame(
+        spark,
+        [(k, round(v, 4)) for k, v in metrics.items()],
+        "metric string, value double",
     )
 
 
@@ -210,19 +232,19 @@ def ml_als_default_vs_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
         train, test = splits.temporal_split(
             data, "timestamp", "userId", split, exact=True
         )
-        train = train.cache()
-        for variant, model in (
-            ("default", recommend.als(maxIter=5)),
-            ("custom", recommend.als(custom=True, rank=8, maxIter=8)),
-        ):
-            pred = model.fit(train).transform(test)
-            m = evaluate.regression_metrics(pred, label_col="rating")
-            rows += [
-                (variant, float(split), name, round(v, 4))
-                for name, v in m.items()
-            ]
-    return spark.createDataFrame(
-        rows, "variant string, split double, metric string, value double"
+        with _cached(train) as (train,):
+            for variant, model in (
+                ("default", recommend.als(maxIter=5)),
+                ("custom", recommend.als(custom=True, rank=8, maxIter=8)),
+            ):
+                pred = model.fit(train).transform(test)
+                m = evaluate.regression_metrics(pred, label_col="rating")
+                rows += [
+                    (variant, float(split), name, round(v, 4))
+                    for name, v in m.items()
+                ]
+    return local_frame(
+        spark, rows, "variant string, split double, metric string, value double"
     )
 
 
@@ -231,10 +253,11 @@ def ml_als_default_vs_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
 # driver-loop-free. ≤10 rows.
 @query("ml_kmeans_cluster_genres")
 def ml_kmeans_cluster_genres(spark: SparkSession, sf_dir: str) -> DataFrame:
-    train, _, model = _als_fit(spark, max_iter=5)
-    factors = recommend.user_factors_vec(model)
-    km = recommend.kmeans(k=25).fit(factors)
-    clustered = km.transform(factors)
+    train, _ = _als_split(spark)
+    with _cached(train) as (cached,):
+        model = recommend.als(custom=True, rank=8, maxIter=5).fit(cached)
+        factors = recommend.user_factors_vec(model)
+        km = recommend.kmeans(k=25).fit(factors)
     return recommend.largest_cluster_genre_top10(
-        clustered, train, fixtures.movies(spark), min_avg_rating=4.0
+        km.transform(factors), train, fixtures.movies(spark), min_avg_rating=4.0
     )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from spark_ml_showcase_spark.functions.rounding import round_like_duckdb
 from spark_ml_showcase_spark.plans import query
 from spark_ml_showcase_spark.streaming import events as se
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 # Streaming twin of tumbling_hourly_counts with the SAME oracle shape:
@@ -381,8 +382,8 @@ def stream_pyds_docs_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         (src, int(got.get(src, 0)), expected, got.get(src, 0) == expected)
         for src in sorted(f"src{i}" for i in range(n_sources))
     ]
-    return spark.createDataFrame(
-        rows, "source string, n_rows bigint, expected bigint, ok boolean"
+    return local_frame(
+        spark, rows, "source string, n_rows bigint, expected bigint, ok boolean"
     )
 
 
@@ -677,6 +678,8 @@ def stream_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
     from spark_ml_showcase_spark.functions import similarity
     from spark_ml_showcase_spark.functions import vectors as V
     from spark_ml_showcase_spark.operators.drift import round_like_duckdb
@@ -686,10 +689,11 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stream_session,
     )
 
-    s2 = _stream_session(spark)
+    emb_path = f"{sf_dir}/embeddings.parquet"
+    s2 = _stream_session(spark, emb_path)
     stream = s2.readStream.schema(
         "vec_id bigint, embedding array<float>, label int"
-    ).parquet(_as_stream_dir(f"{sf_dir}/embeddings.parquet"))
+    ).parquet(_as_stream_dir(emb_path))
     # static dimension on the STREAM's session (memory-sink tables and
     # stream-static joins are session-scoped)
     docs = Catalog(s2, sf_dir).documents.select("doc_id", "source")
@@ -702,17 +706,23 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("w"),
         similarity.as_double("embedding").alias("v"),
     )
-    elems = j.select("source", "w", F.posexplode("v").alias("p", "x"))
-    norms = j.select(
-        "source",
-        "w",
-        F.lit(-1).alias("p"),
-        round_like_duckdb(F.sqrt(V.dot("v", "v")), 6).alias("x"),
-    )
-    # ROUND(x,6) is idempotent on the already-rounded norm rows, so one
-    # agg expression serves both row kinds
+    # ONE scan of the stream: each vector yields its norm (p = -1) and
+    # its elements (p = 0..d-1); ROUND(x,6) is idempotent on the
+    # already-rounded norm, so one agg expression serves both row kinds
+    norm = round_like_duckdb(F.sqrt(V.dot("v", "v")), 6)
     agg = (
-        elems.unionByName(norms)
+        j.select(
+            "source",
+            "w",
+            F.inline(
+                F.concat(
+                    F.array(F.struct(F.lit(-1).alias("p"), norm.alias("x"))),
+                    F.transform(
+                        "v", lambda x, i: F.struct(i.alias("p"), x.alias("x"))
+                    ),
+                )
+            ),
+        )
         .groupBy("source", "w", "p")
         .agg(
             F.sum(
@@ -721,66 +731,45 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("cnt"),
         )
     )
-    c = se.run_to_memory(agg, spark, output_mode="complete").localCheckpoint()
-    per_w = c.filter(F.col("p") == -1).select(
-        "source",
-        "w",
-        F.col("cnt").alias("n"),
-        round_like_duckdb(F.col("se").cast("double") / F.col("cnt"), 6).alias(
-            "mean_norm"
-        ),
+    # the sink is one partition, so everything below is one job with no
+    # exchange: n per (source, w) rides a window instead of a join, the
+    # norm row (p = -1) pairs baseline/current alongside the elements,
+    # and one per-source agg folds both legs (the inner joins of the
+    # oracle drop null sources and sources without elements, as here)
+    c = se.run_to_memory(agg, spark, output_mode="complete")
+    base, cur, norm_row = (
+        F.col("w") == "baseline",
+        F.col("w") == "current",
+        F.col("p") == -1,
     )
-    me = (
-        c.filter(F.col("p") >= 0)
-        .join(
-            F.broadcast(per_w.select("source", "w", "n")), ["source", "w"]
-        )
-        .select(
-            "source",
-            "w",
-            "p",
-            round_like_duckdb(
-                F.col("se").cast("double") / F.col("n"), 6
-            ).alias("m"),
-        )
-    )
-    sh = me.groupBy("source", "p").agg(
-        F.max(F.when(F.col("w") == "baseline", F.col("m"))).alias("mb"),
-        F.max(F.when(F.col("w") == "current", F.col("m"))).alias("mc"),
-    )
-    shift = (
-        sh.select(
-            "source",
-            round_like_duckdb(
-                (F.col("mb") - F.col("mc")) * (F.col("mb") - F.col("mc")),
-                12,
-            )
-            .cast("decimal(38,12)")
-            .alias("t"),
-        )
-        .groupBy("source")
+    n = F.max(F.when(norm_row, F.col("cnt"))).over(Window.partitionBy("source", "w"))
+    paired = (
+        c.select("source", "w", "p", "se", n.alias("n"))
+        .withColumn("m", round_like_duckdb(F.col("se").cast("double") / F.col("n"), 6))
+        .groupBy("source", "p")
         .agg(
-            round_like_duckdb(F.sqrt(F.sum("t").cast("double")), 6).alias(
-                "centroid_shift"
-            )
+            F.max(F.when(base, F.col("m"))).alias("mb"),
+            F.max(F.when(cur, F.col("m"))).alias("mc"),
+            F.max(F.when(base, F.col("n"))).alias("nb"),
+            F.max(F.when(cur, F.col("n"))).alias("nc"),
         )
     )
-    wide = per_w.groupBy("source").agg(
-        F.max(F.when(F.col("w") == "baseline", F.col("n")))
-        .cast("bigint")
-        .alias("n_base"),
-        F.max(F.when(F.col("w") == "current", F.col("n")))
-        .cast("bigint")
-        .alias("n_cur"),
-        F.max(F.when(F.col("w") == "baseline", F.col("mean_norm"))).alias(
-            "mean_norm_base"
-        ),
-        F.max(F.when(F.col("w") == "current", F.col("mean_norm"))).alias(
-            "mean_norm_cur"
-        ),
-    )
+    t = round_like_duckdb(
+        (F.col("mb") - F.col("mc")) * (F.col("mb") - F.col("mc")), 12
+    ).cast("decimal(38,12)")
     return (
-        wide.join(F.broadcast(shift), "source")
+        paired.groupBy("source")
+        .agg(
+            F.max(F.when(norm_row, F.col("nb"))).cast("bigint").alias("n_base"),
+            F.max(F.when(norm_row, F.col("nc"))).cast("bigint").alias("n_cur"),
+            round_like_duckdb(
+                F.sqrt(F.sum(F.when(~norm_row, t)).cast("double")), 6
+            ).alias("centroid_shift"),
+            F.max(F.when(norm_row, F.col("mb"))).alias("mean_norm_base"),
+            F.max(F.when(norm_row, F.col("mc"))).alias("mean_norm_cur"),
+            F.count(F.when(~norm_row, 1)).alias("_elems"),
+        )
+        .filter(F.col("source").isNotNull() & (F.col("_elems") > 0))
         .select(
             "source",
             "n_base",

@@ -44,6 +44,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 class SnapshotConflict(RuntimeError):
@@ -192,9 +193,7 @@ def read_snapshot(
         )
     m = _read_manifest(table_dir, version)
     if not m["files"]:
-        return spark.createDataFrame(
-            [], schema=_schema_from_json(m["schema"])
-        )
+        return local_frame(spark, [], schema=_schema_from_json(m["schema"]))
     paths = [os.path.join(table_dir, f) for f in m["files"]]
     # Schema evolution: an append commit may add columns, so a
     # snapshot's file set can span schema generations. mergeSchema

@@ -63,6 +63,7 @@ from spark_ml_showcase_spark.operators.dedup import (
     _band_structs,
     _minhash_signatures_np,
 )
+from spark_ml_showcase_spark.sources.local import local_frame
 
 
 def stream_minhash_dedup(
@@ -352,9 +353,7 @@ def stream_minhash_dedup(
     final_parts = state_parts(sig_dir)
     if not final_parts:
         # zero input rows/files → no batch ever ran → empty retained set
-        return s.createDataFrame(
-            [], f"{id_col} bigint, signature array<bigint>"
-        )
+        return local_frame(s, [], f"{id_col} bigint, signature array<bigint>")
     return s.read.parquet(*final_parts).select(
         F.col("_id").alias(id_col), F.col("_sig").alias("signature")
     )

@@ -18,9 +18,17 @@ Semantics notes:
   ``gap`` after the previous one stays IN-session (pinned by
   tests/test_windows_sessions.py; the batch oracle splits on
   strictly-greater gaps).
-- State stores shuffle on the grouping key; at scale size
-  ``spark.sql.shuffle.partitions`` to the key cardinality and prefer
-  RocksDB state store for large state.
+- State stores shuffle on the grouping key, one store instance per
+  state partition, and every instance commits every micro-batch. Each
+  stream runs on its own session (``_stream_session``) whose state
+  width comes from the width policy over the source's bytes
+  (``functions.partitioning.STREAM_STATE_BYTES_PER_TASK``): one
+  partition at fixture scale, where a commit per partition is the cost,
+  the session's parallelism on a large source. Prefer the RocksDB state
+  store for large state.
+- ``run_to_memory`` returns the memory sink as one partition: its rows
+  already sit in the driver JVM, and downstream batch work over them
+  then plans with no exchange.
 """
 
 from __future__ import annotations
@@ -36,7 +44,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
+from spark_ml_showcase_spark.functions import partitioning
 from spark_ml_showcase_spark.sources.io import run_dir, staged_dir
+from spark_ml_showcase_spark.sources.local import local_frame
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
@@ -91,18 +101,37 @@ def _as_stream_dir(path: str) -> str:
     return d
 
 
-def _stream_session(spark: SparkSession, shuffle_partitions: int = 8) -> SparkSession:
-    """Isolated session for one finite stream run. Streaming state
-    shuffles on ``spark.sql.shuffle.partitions`` as of CHECKPOINT
-    creation — on the driver's plain session that default is 200, i.e.
-    200 state-store instances per stateful operator for a small test
-    stream. ``newSession()`` shares the SparkContext but owns its conf,
-    so the stream gets a right-sized state layout without mutating (or
-    racing — micro-batches plan asynchronously) the caller's session."""
-    import os
+def _path_bytes(path: str) -> int:
+    """Bytes of a parquet file, or of every file under a directory."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+    )
 
+
+def _stream_session(spark: SparkSession, source: str) -> SparkSession:
+    """Isolated session for one finite stream run over ``source``.
+    Streaming state shuffles on ``spark.sql.shuffle.partitions`` as of
+    CHECKPOINT creation, one state-store instance per partition per
+    stateful operator, and every instance commits every micro-batch.
+    The width is the policy's (``partitioning.width``) over the
+    source's bytes at ``STREAM_STATE_BYTES_PER_TASK``: one partition at
+    fixture scale, the session's parallelism on a large source.
+    ``newSession()`` shares the SparkContext but owns its conf, so the
+    stream gets its state layout without mutating (or racing —
+    micro-batches plan asynchronously) the caller's session."""
     s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    s.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(
+            partitioning.width(
+                spark, _path_bytes(source), partitioning.STREAM_STATE_BYTES_PER_TASK
+            )
+        ),
+    )
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     provider = os.environ.get("SMS_STATESTORE_PROVIDER")
@@ -119,8 +148,8 @@ def stream_events(
     used (TIMESTAMP(NANOS) → read as long + div-1000 convert;
     timestamp[us] naive → read as timestamp_ntz + cast), exactly like
     ``sources.catalog.Catalog``. Runs on an isolated per-stream session
-    (``_stream_session``) with a bounded state-partition count."""
-    spark = _stream_session(spark)
+    (``_stream_session``) with a work-sized state width."""
+    spark = _stream_session(spark, path)
     nanos = _ts_needs_long_read(path)
     reader = spark.readStream.schema(EVENTS_SCHEMA if nanos else EVENTS_SCHEMA_NTZ)
     if max_files_per_trigger is not None:
@@ -285,9 +314,14 @@ def run_to_memory(
     timeout_sec: int = 120,
 ) -> DataFrame:
     """Run a streaming DataFrame to exhaustion (AvailableNow) into a
-    memory sink and return the result as a BATCH DataFrame. Test/driver
-    harness — a production job would writeStream to parquet/Kafka with a
-    checkpoint dir instead."""
+    memory sink and return the result as a single-partition BATCH
+    DataFrame. Test/driver harness — a production job would writeStream
+    to parquet/Kafka with a checkpoint dir instead.
+
+    Memory-sink rows sit in the driver JVM at any scale, so the result
+    is read as one partition, like ``sources.local.local_frame``: its
+    plan reports ``SinglePartition`` and a downstream aggregate, join or
+    sort plans with no exchange."""
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
     q = (
         stream_df.writeStream.format("memory")
@@ -312,7 +346,7 @@ def run_to_memory(
     # memory-sink tables are SESSION-scoped: resolve through the
     # stream's own session (an isolated _stream_session, not
     # necessarily the `spark` the caller passed)
-    return stream_df.sparkSession.table(name)
+    return stream_df.sparkSession.table(name).coalesce(1)
 
 
 def stream_stream_interval_join(
@@ -398,7 +432,7 @@ def stream_staged(
     normalized UTC timestamp — no NANOS/NTZ adaptation needed). Runs on
     an isolated ``_stream_session``; the declared schema is taken from a
     batch read of the same directory."""
-    spark = _stream_session(spark)
+    spark = _stream_session(spark, staged_dir)
     schema = spark.read.parquet(staged_dir).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -488,7 +522,7 @@ def upsert_latest_per_key(
     s = stream_df.sparkSession
     if not os.path.exists(os.path.join(cur_dir, "_SUCCESS")):
         # zero input → no batch ever ran → empty state, same schema
-        return s.createDataFrame([], stream_df.schema)
+        return local_frame(s, [], stream_df.schema)
     return s.read.parquet(cur_dir)
 
 

@@ -176,39 +176,39 @@ def test_k_core_fixpoint_within_fixed_rounds(spark):
     assert rows8 == rows9 and rows8
 
 
-def test_triangle_count_width_invariant_and_scale_adaptive(spark, monkeypatch):
-    """r15 verdict #2: the wedge-stage width derives from the
-    measured wedge workload (sum of c*(c-1)/2 over oriented
-    out-degrees), capped at session parallelism — and the RESULT is
-    identical whatever width runs, because every rank/agg downstream is
-    partitioning-independent."""
+def test_triangle_count_wedge_exchange_runs_at_session_width(spark):
+    """The src-keyed wedge repartition names the session's parallelism
+    and is also the merge join's exchange. When every join child is a
+    shuffle, EnsureRequirements keeps a child's width only if it is at
+    least ``spark.sql.shuffle.partitions`` and otherwise re-plans both
+    sides at that, so what runs is the larger of the two (the plain
+    session's 200 wins over the engine's parallelism). The count is
+    exact either way."""
     import re
-    from collections import Counter
+    from itertools import combinations
 
-    from spark_ml_showcase_spark.functions import partitioning
     from spark_ml_showcase_spark.operators.graph import triangle_count
 
     edges = [(i, j) for i in range(12) for j in range(i + 1, 12) if (i + j) % 3]
-    df = spark.createDataFrame(edges, "u bigint, v bigint")
-    # the wedge workload, by the same (degree, id) orientation
-    deg = Counter(x for e in edges for x in e)
-    out = Counter(min(e, key=lambda x: (deg[x], x)) for e in edges)
-    wedges = sum(c * (c - 1) // 2 for c in out.values())
+    adj = set(edges)
+    want = sum(
+        {(a, b), (a, c), (b, c)} <= adj for a, b, c in combinations(range(12), 3)
+    )
+    n_nodes = len({x for e in edges for x in e})
     par = spark.sparkContext.defaultParallelism
-    assert wedges >= par
-
-    def run(per_task):
-        monkeypatch.setattr(partitioning, "WEDGES_PER_TASK", per_task)
-        frame = triangle_count(df)
-        plan = frame._jdf.queryExecution().optimizedPlan().toString()
-        widths = set(re.findall(r"RepartitionByExpression \[src#\d+L?\], (\d+)", plan))
-        return widths, tuple(frame.first())
-
-    base = run(partitioning.WEDGES_PER_TASK)[1]
-    # one task per wedge: capped at session width; half the wedges per
-    # task: width 2; a huge per-task target collapses to width 1 — a
-    # tiny workload must NOT fan out to session width
-    for per_task, want in ((1, par), (-(-wedges // 2), 2), (10**9, 1)):
-        widths, got = run(per_task)
-        assert widths == {str(want)}, (per_task, widths)
-        assert got == base
+    for shuffle in (par, par - 1, par + 2):
+        s = spark.newSession()
+        s.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+        frame = triangle_count(s.createDataFrame(edges, "u bigint, v bigint"))
+        qe = frame._jdf.queryExecution()
+        named = re.findall(
+            r"RepartitionByExpression \[src#\d+L?\], (\d+)",
+            qe.optimizedPlan().toString(),
+        )
+        runs = re.findall(
+            r"hashpartitioning\(src#\d+L?, (\d+)\), REPARTITION_BY_NUM",
+            qe.executedPlan().toString(),
+        )
+        assert set(named) == {str(par)}
+        assert set(runs) == {str(max(par, shuffle))}, (shuffle, runs)
+        assert tuple(frame.first()) == (n_nodes, len(edges), want)

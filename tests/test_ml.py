@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_ml_showcase_spark.ml import (
@@ -263,3 +264,40 @@ def test_learned_quality_terciles_query_monotone(spark):
     probs = [r["mean_quality_prob"] for r in rows]
     assert probs[0] < probs[1] < probs[2]
     assert sum(r["n_docs"] for r in rows) > 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ml_feature_importances_rf",  # one cached split, driver-side result
+        "ml_claims_regparam_curve",  # two cached splits, a fit loop
+        "ml_als_metrics",  # the temporal split
+        "ml_kmeans_cluster_genres",  # a lazy result over the split
+    ],
+)
+def test_ml_queries_leave_no_cached_data(spark, monkeypatch, name):
+    """An ``ml_*`` query unpersists its split caches once its fits and
+    evals are done: the CacheManager is empty after it, its result
+    still reads. Fixtures, sweeps and ALS iterations are shrunk to keep
+    the fits small; the cache scoping does not depend on them. The
+    other ``ml_*`` queries use the same ``_cached`` scope."""
+    from spark_ml_showcase_spark.plans import registry
+
+    for fixture, small in (
+        ("higgs", {"n": 300}),
+        ("claims", {"n": 600}),
+        ("ratings", {"n_ratings": 800}),
+    ):
+        full = getattr(fixtures, fixture)
+        monkeypatch.setattr(
+            fixtures, fixture, lambda s, *a, _f=full, _k=small, **k: _f(s, **_k)
+        )
+    monkeypatch.setattr(regressions, "REG_PARAM_OPTIONS", [0.1])
+    als = recommend.als
+    monkeypatch.setattr(
+        recommend, "als", lambda **k: als(**{**k, "maxIter": 1, "rank": 2})
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert registry()[name](spark, "").collect()
+    assert cache.isEmpty()

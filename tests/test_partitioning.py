@@ -112,3 +112,62 @@ def test_only_the_policy_sizes_partitions():
                 ):
                     hits.append(f"{rel}:{node.lineno}: .{node.attr}")
     assert hits == []
+
+
+def _package_calls():
+    """(path relative to the package, Call node) for every call in it."""
+    pkg = os.path.join(REPO, "spark_ml_showcase_spark")
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                p = os.path.join(root, f)
+                tree = ast.parse(open(p, encoding="utf-8").read(), filename=p)
+                for node in ast.walk(tree):
+                    if isinstance(node, ast.Call):
+                        yield os.path.relpath(p, pkg), node
+
+
+def test_only_the_local_frame_module_creates_dataframes():
+    """Rows on the driver become frames only through ``sources/local.py``
+    (an Arrow-built single-partition ``LocalRelation``, not a Python-RDD
+    scan)."""
+    helper = os.path.join("sources", "local.py")
+    hits = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_calls()
+        if isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+        and rel != helper
+    ]
+    assert hits == []
+
+
+def test_shuffle_partitions_are_set_only_from_the_policy():
+    """Outside ``session.py`` (the session's own default) a
+    ``spark.sql.shuffle.partitions`` write must take its value from
+    ``partitioning.width``."""
+
+    def calls_width(node):
+        return any(
+            isinstance(n, ast.Call)
+            and (
+                (isinstance(n.func, ast.Attribute) and n.func.attr == "width")
+                or (isinstance(n.func, ast.Name) and n.func.id == "width")
+            )
+            for n in ast.walk(node)
+        )
+
+    hits = []
+    for rel, node in _package_calls():
+        args = list(node.args) + [k.value for k in node.keywords]
+        key = [
+            i
+            for i, a in enumerate(args)
+            if isinstance(a, ast.Constant) and a.value == "spark.sql.shuffle.partitions"
+        ]
+        if not key or rel == "session.py":
+            continue
+        value = args[key[0] + 1 :]
+        if not value or not calls_width(value[0]):
+            hits.append(f"{rel}:{node.lineno}")
+    assert hits == []

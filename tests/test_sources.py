@@ -543,3 +543,31 @@ def test_base_tables_are_read_only_through_catalog():
                 n = src.count("\n", 0, m.start()) + 1
                 hits.append(f"{rel}:{n}: {m.group(0)}")
     assert hits == []
+
+
+def test_local_frame_matches_create_dataframe_on_one_partition(spark):
+    """``local_frame`` returns what ``createDataFrame(list, schema)``
+    returns — nulls, arrays of double and int, booleans, bigints and an
+    empty list — from a ``LocalRelation`` that states one partition
+    and reads with no Python-RDD scan."""
+    from spark_ml_showcase_spark.functions import partitioning
+    from spark_ml_showcase_spark.sources.local import local_frame
+
+    schema = "k bigint, x double, s string, v array<double>, i array<int>, b boolean"
+    rows = [
+        (1, 0.5, "a", [1.0, None], [1, 2], True),
+        (2**40, None, None, None, [], False),
+        (None, -1.25, "", [], None, None),
+    ]
+    for data in (rows, []):
+        want = spark.createDataFrame(data, schema)
+        got = local_frame(spark, data, schema)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        qe = got._jdf.queryExecution()
+        assert "LocalRelation" in qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+        assert "LocalTableScan" in physical and "ExistingRDD" not in physical
+        assert partitioning.plan_width(got) == 1
+    struct = spark.createDataFrame([], schema).schema
+    assert local_frame(spark, [], struct).schema == struct

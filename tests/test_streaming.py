@@ -677,3 +677,73 @@ def test_stream_embedding_drift_equals_batch_twin(spark):
     stream = [tuple(r) for r in SQ.stream_embedding_drift(spark, sf).collect()]
     assert batch == stream
     assert len(batch) > 0
+
+
+def test_memory_sink_result_plans_downstream_without_shuffles(spark):
+    """``run_to_memory`` returns the sink as one partition: a groupBy,
+    a join and an orderBy over it plan no exchange but a broadcast, and
+    the answer equals the batch one."""
+    import re
+
+    from conftest import SF_SMALL
+
+    from spark_ml_showcase_spark.sources.catalog import Catalog
+    from spark_ml_showcase_spark.sources.local import local_frame
+
+    path = os.path.join(SF_SMALL, "events.parquet")
+    counts = se.run_to_memory(
+        se.tumbling_counts(se.stream_events(spark, path), watermark=None),
+        spark,
+        output_mode="complete",
+    )
+    s = counts.sparkSession
+    hours = local_frame(s, [(h, h % 2 == 0) for h in range(24)], "h int, even boolean")
+    out = (
+        counts.groupBy(F.hour("window_start").alias("h"))
+        .agg(F.sum("n").alias("n"))
+        .join(hours, "h")
+        .orderBy("h")
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    shuffles = [
+        ln for ln in plan.splitlines() if re.search(r"(?<!Broadcast)Exchange ", ln)
+    ]
+    assert shuffles == [], plan
+    want = (
+        Catalog(spark, SF_SMALL)
+        .events.groupBy(F.hour("ts").alias("h"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    assert [(r.h, r.n) for r in out.collect()] == sorted(
+        (r.h, r.n) for r in want.collect()
+    )
+
+
+def test_embedding_drift_scans_its_stream_once(spark, monkeypatch):
+    """The drift stream reads each embedding row once (norm and elements
+    come out of one ``inline``), so its batch reports as many input
+    rows as the table has."""
+    import json
+
+    from conftest import SF_SMALL
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from spark_ml_showcase_spark.plans import registry
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    registry()["stream_embedding_drift"](spark, SF_SMALL).collect()
+    rows = [
+        int(json.loads(p.json)["numInputRows"])
+        for q in started
+        for p in q.recentProgress
+    ]
+    n = spark.read.parquet(os.path.join(SF_SMALL, "embeddings.parquet")).count()
+    assert len(started) == 1 and sum(rows) == n and max(rows) == n
