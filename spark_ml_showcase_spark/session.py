@@ -16,15 +16,39 @@ large multi-executor cluster:
   engines and oracle checks.
 - ``spark.sql.shuffle.partitions`` sized for the local core count; on a real
   cluster AQE's coalescing makes the initial number a ceiling, not a target.
+- Python workers run under the engine's daemon (``spark.python.daemon.module``
+  = ``spark_ml_showcase_spark.pyworker``), which keeps ``pyspark.zip``'s
+  directory cached across tasks instead of re-reading it on each one
+  (120-170 ms per task on CPython 3.11). The daemon imports the package, so
+  the package's root joins ``spark.executorEnv.PYTHONPATH`` (after any
+  value already configured); on a cluster the package must be importable
+  on the executors at that path or through the executors' own environment,
+  as the package's UDFs already need.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _executor_pythonpath() -> str:
+    """The executor PYTHONPATH the running JVM carries (spark-submit
+    ``--conf``, spark-defaults) with the package root added."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # under spark-submit the JVM and its conf exist before the first
+        # session; connect now (``getOrCreate`` would) so they are read
+        SparkContext._ensure_initialized()
+    configured = SparkConf().get("spark.executorEnv.PYTHONPATH", "") or ""
+    paths = [p for p in configured.split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        paths.append(_PACKAGE_ROOT)
+    return os.pathsep.join(paths)
 
 
 def session_builder(
@@ -50,6 +74,8 @@ def session_builder(
         # Arrow-batch the Python UDTF boundary too (functions/udtfs.py)
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "spark_ml_showcase_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _executor_pythonpath())
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if master is not None:

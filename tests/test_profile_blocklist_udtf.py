@@ -133,6 +133,63 @@ def test_udtf_chunker_matches_native_chunker(spark):
         ).collect()
 
 
+def _scopes(store, stage_id: int) -> list[str]:
+    """The operator scopes in a stage's RDD operation graph."""
+    def walk(cluster):
+        kids = cluster.childClusters()
+        names = [cluster.name()]
+        for i in range(kids.size()):
+            names += walk(kids.apply(i))
+        return names
+
+    return walk(store.operationGraphForStage(stage_id).rootCluster())
+
+
+def _python_jobs(spark, group: str, run) -> int:
+    """Jobs launched by ``run()`` under ``group`` that run a stage with
+    the Python UDTF node (skipped stages do not run it)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    n = 0
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        stages = store.job(job_id).stageIds()
+        ran = []
+        for i in range(stages.size()):
+            attempt = store.lastStageAttempt(stages.apply(i))
+            if str(attempt.status()) != "SKIPPED":
+                ran.append(attempt.stageId())
+        n += any("ArrowEvalPythonUDTF" in _scopes(store, sid) for sid in ran)
+    return n
+
+
+@pytest.mark.parametrize("scan_width", [None, 3])
+def test_udtf_lateral_chunk_docs_runs_the_udtf_once_in_global_order(spark, monkeypatch, scan_width):
+    """The range exchange sits below the UDTF, so its sampling job reads
+    the scan and one job runs the UDTF; the rows come back ordered by
+    (doc_id, chunk_id) at the scan's width and at a wider one."""
+    import __spark_entry__ as entry
+
+    from spark_ml_showcase_spark.functions import partitioning
+
+    from conftest import SF_SMALL
+
+    if scan_width is not None:
+        monkeypatch.setattr(partitioning, "plan_width", lambda df: scan_width)
+    df = entry.queries()["udtf_lateral_chunk_docs"](spark, SF_SMALL)
+    rows = []
+    assert _python_jobs(spark, f"udtf-once-{scan_width}", lambda: rows.extend(df.collect())) == 1
+    keys = [(r.doc_id, r.chunk_id) for r in rows]
+    assert keys and keys == sorted(keys)
+    assert len(set(keys)) == len(keys)
+
+
 def test_profile_drift_detects_shifts_and_schema_changes(spark):
     from spark_ml_showcase_spark.operators.profile import profile_drift
 

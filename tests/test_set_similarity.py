@@ -5,8 +5,11 @@ seeds, thresholds and degenerate shapes."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 
+from spark_ml_showcase_spark.functions import partitioning
 from spark_ml_showcase_spark.operators.dedup import set_similarity_join
 
 
@@ -85,3 +88,22 @@ def test_integral_threshold_product_prefix_complete(spark):
     texts[102] = " ".join(base[:7] + ["z1", "z2", "z3"])
     for t in (0.5, 0.7, 1.0):
         assert _run(spark, texts, t) == _naive(texts, t)
+
+
+def test_verify_width_survives_when_it_equals_the_shuffle_width(spark, monkeypatch):
+    """A verify width equal to spark.sql.shuffle.partitions still runs as
+    its own exchange: one hashed on (id_a, id_b) equalled the dedup's
+    and was dropped, and AQE then coalesced the verify stage."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width == partitioning.width(spark) > 1
+    monkeypatch.setattr(partitioning, "VERIFY_ROWS_PER_TASK", 1)
+    rng = np.random.default_rng(5)
+    vocab = [f"w{k}" for k in range(12)]
+    texts = {i: " ".join(rng.choice(vocab, size=6)) for i in range(60)}
+    df = spark.createDataFrame(list(texts.items()), "doc_id bigint, text string")
+    out = set_similarity_join(df, threshold=0.6)
+    got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+    assert got == _naive(texts, 0.6) and got
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    verify = re.findall(r"Exchange hashpartitioning\(id_a#\d+L, (\d+)\), REPARTITION_BY_NUM", final)
+    assert verify == [str(width)]
