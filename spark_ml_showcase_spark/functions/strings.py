@@ -9,7 +9,8 @@ Reference citations:
 - F4 negative-index emulation ``getItem(size(...) - k)``
   (``log_mining_analysis.py:27-28``) — the engine uses ``element_at(arr, -k)``
   which is the same value with one evaluation of the split instead of two.
-- F5 explode: ``als_clustering_analysis.py:139``.
+- F5 explode: ``als_clustering_analysis.py:139`` — ``F.explode`` over
+  :func:`split_tokens`.
 
 All JVM-side, codegen'd; regex dialect is Java (DuckDB oracle is RE2 —
 stick to the ASCII-safe common subset: ``\\d \\w`` literals, anchors,
@@ -18,7 +19,7 @@ capture groups).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -39,12 +40,6 @@ def token_at(col: str | Column, index: int, pattern: str = r"\s+") -> Column:
     (``element_at`` — replaces the reference's split+size+getItem double
     evaluation)."""
     return F.element_at(split_tokens(col, pattern), index)
-
-
-def explode_tokens(df: DataFrame, col: str, pattern: str = r"\s+",
-                   alias: str = "token") -> DataFrame:
-    """F3+F5: split then explode to one row per token."""
-    return df.select(F.explode(split_tokens(col, pattern)).alias(alias))
 
 
 def json_get(col: str | Column, path: str) -> Column:

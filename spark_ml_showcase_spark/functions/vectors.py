@@ -3,8 +3,10 @@ higher-order functions (no Python in the hot path).
 
 These power the similarity-search extension (SURVEY.md §2.12 X3/X5) on the
 ``embeddings`` testdata table. ``zip_with`` + ``aggregate`` stay inside
-whole-stage codegen; for very wide vectors (≥~1k dims) a vectorized Pandas
-UDF over Arrow batches can win — see ``similarity.py`` which offers both.
+whole-stage codegen, but higher-order functions evaluate interpreted per
+element; the top-k scorers in ``similarity.py`` use
+``similarity.cosine_udf`` instead, an Arrow fold bit-identical to
+:func:`cosine`.
 """
 
 from __future__ import annotations
@@ -28,7 +30,9 @@ def norm(a: str | Column) -> Column:
 
 
 def cosine(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity; null-safe-ish (0/0 → NaN, callers filter).
+    """Cosine similarity. A zero vector (zero denominator) gives NULL
+    through ``try_divide``, with or without ANSI mode, as DuckDB's
+    ``x / 0.0`` and ``similarity.cosine_udf`` do.
 
     Fused single pass: one zip_with + one aggregate accumulates (a·b,
     |a|², |b|²) together instead of three independent array scans. Each
@@ -57,7 +61,9 @@ def cosine(a: str | Column, b: str | Column) -> Column:
     return F.element_at(
         F.transform(
             F.array(acc),
-            lambda s: s["xy"] / (F.sqrt(s["xx"]) * F.sqrt(s["yy"])),
+            lambda s: F.try_divide(
+                s["xy"], F.sqrt(s["xx"]) * F.sqrt(s["yy"])
+            ),
         ),
         1,
     )

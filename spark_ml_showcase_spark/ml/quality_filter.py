@@ -124,23 +124,6 @@ def train_quality_filter(
         labeled.unpersist()
 
 
-def save_quality_filter(model, path: str) -> None:
-    """Persist a fitted filter (MLlib PipelineModel layout: metadata +
-    per-stage parquet) — the offline half of offline-train →
-    online-score. Overwrites ``path``."""
-    model.write().overwrite().save(path)
-
-
-def load_quality_filter(path: str):
-    """Load a persisted filter in ANY session/process — scoring needs
-    only this artifact, never the training corpus or the training
-    session. Round-trip parity is pinned bit-for-bit in
-    tests/test_ml.py."""
-    from pyspark.ml import PipelineModel
-
-    return PipelineModel.load(path)
-
-
 def score_quality(
     model,
     docs: DataFrame,

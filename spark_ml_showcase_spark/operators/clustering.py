@@ -153,35 +153,3 @@ def materialize_events_clustered(
         build,
         key=str(n_partitions),
     )
-
-
-def file_band_overlap(path: str, col: str, lo: float, hi: float) -> tuple[int, int]:
-    """Skipping observable: (files whose footer [min, max] on ``col``
-    intersects [lo, hi], total files) — read from parquet metadata only,
-    no data pages. This is exactly the statistic the scan's row-group
-    pruning consults."""
-    import pyarrow.parquet as pq
-
-    touched = total = 0
-    for root, _, files in os.walk(path):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(root, f)).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if col not in idx:
-                raise KeyError(f"{col!r} not in {sorted(idx)}")
-            fmin = fmax = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                if st is None or not st.has_min_max:
-                    fmin, fmax = float("-inf"), float("inf")
-                    break
-                fmin = st.min if fmin is None else min(fmin, st.min)
-                fmax = st.max if fmax is None else max(fmax, st.max)
-            if fmin is None:
-                continue  # empty file
-            total += 1
-            if fmax >= lo and fmin <= hi:
-                touched += 1
-    return touched, total

@@ -431,46 +431,6 @@ def ngram_jaccard_pairs(
 _SIMHASH_BITS = 32
 
 
-def simhash(
-    text_col: str | Column, *, bits: int = _SIMHASH_BITS, ngram: int = 3
-) -> Column:
-    """SimHash of the n-gram shingle set: per-shingle xxhash64 votes ±1 on
-    each of ``bits`` bit positions; the packed sign vector is the hash.
-    Near-duplicate texts differ in few bits (hamming distance).
-
-    Shingles (not unigram tokens) as the feature set: on a small-vocab
-    corpus nearly all documents share most unigrams, which collapses
-    unigram SimHash to hamming≈0 for everything; trigram space is large
-    enough to discriminate."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = T.shingles(c, ngram)
-    # Hash each shingle ONCE up front — the per-bit vote extraction below
-    # then works on the precomputed long (shiftright+mask), instead of
-    # re-evaluating xxhash64 `bits` times per shingle (Catalyst does not
-    # CSE across the unrolled bit expressions).
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def bit_votes(h: Column) -> Column:
-        return F.array(
-            *[
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(
-                    F.lit(-1)
-                )
-                for i in range(bits)
-            ]
-        )
-
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(acc, bit_votes(h), lambda a, v: a + v),
-    )
-    signs = F.transform(votes, lambda v: F.when(v >= 0, F.lit(1)).otherwise(F.lit(0)))
-    return F.aggregate(
-        signs, F.lit(0).cast("bigint"), lambda acc, s: acc * 2 + s
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two packed hashes via bit_count(xor)."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -481,8 +441,12 @@ def _simhash_agg(
 ) -> DataFrame:
     """(_id, _h) simhash via explode → conditional-sum hash aggregate.
 
-    Same bit semantics as the ``simhash`` Column expression, but fully
-    whole-stage-codegen'd: per (doc, shingle) row ONE xxhash64, then
+    SimHash of the n-gram shingle set: per-shingle xxhash64 votes ±1 on
+    each of ``bits`` bit positions; the packed sign vector is the hash, so
+    near-duplicate texts differ in few bits (hamming distance). Shingles,
+    not unigram tokens: on a small-vocab corpus nearly all documents
+    share most unigrams, which collapses unigram SimHash to hamming≈0.
+    Fully whole-stage-codegen'd: per (doc, shingle) row ONE xxhash64, then
     ``bits`` conditional sums with map-side partial aggregation. Docs
     with no shingles (< ngram tokens) drop out (explode of empty)."""
     src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
@@ -501,7 +465,7 @@ def _simhash_agg(
         ]
     )
     packed = F.lit(0).cast("bigint")
-    for i in range(bits):  # bit 0 first → MSB, matching simhash()
+    for i in range(bits):  # bit 0 first → MSB
         packed = packed * 2 + F.when(F.col(f"_v{i}") >= 0, 1).otherwise(0)
     return votes.select("_id", packed.alias("_h"))
 

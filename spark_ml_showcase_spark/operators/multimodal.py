@@ -100,30 +100,6 @@ def decode_bmp(buf: bytes) -> tuple[int, int, list[float]]:
     return w, h_abs, [tot[2] / n, tot[1] / n, tot[0] / n]
 
 
-def encode_wav(
-    n_frames: int, framerate: int, amplitude: int, *, period: int = 16
-) -> bytes:
-    """Build a mono 16-bit PCM WAV whose samples are a square wave of the
-    given amplitude (exact integer mean-of-squares, so decoded stats are
-    reproducible in SQL)."""
-    import io
-    import struct
-    import wave
-
-    bio = io.BytesIO()
-    with wave.open(bio, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(framerate)
-        half = period // 2
-        samples = [
-            amplitude if (i % period) < half else -amplitude
-            for i in range(n_frames)
-        ]
-        wf.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    return bio.getvalue()
-
-
 def decode_wav(buf: bytes) -> tuple[int, int, list[float]]:
     """Parse a PCM WAV via the stdlib ``wave`` module. Returns
     (n_channels, bits_per_sample, [n_frames, framerate, mean, rms])."""

@@ -72,11 +72,6 @@ def zero_guarded_log(col: str | Column, zero_sub: float = 0.5) -> Column:
     return F.log(F.when(c == 0, F.lit(zero_sub)).otherwise(c))
 
 
-def filter_eq(df: DataFrame, col: str, value) -> DataFrame:
-    """P9: equality filter."""
-    return df.filter(F.col(col) == F.lit(value))
-
-
 def filter_suffix(df: DataFrame, col: str, *suffixes: str) -> DataFrame:
     """P10: suffix-match filter (reference ``host.endswith('.de')``,
     ``log_mining_analysis.py:32-34``). Multiple suffixes OR together.
@@ -89,10 +84,3 @@ def filter_suffix(df: DataFrame, col: str, *suffixes: str) -> DataFrame:
     for s in suffixes[1:]:
         pred = pred | F.col(col).endswith(s)
     return df.filter(pred)
-
-
-def percentage_of_total(df: DataFrame, count_col: str, total: float) -> DataFrame:
-    """P8: the reference's percentage derivation
-    (``log_mining_analysis.py:98-104``, ``Claims_Prediction.py:69``):
-    ``percentage = count / total * 100`` with the total folded as a literal."""
-    return df.withColumn("percentage", F.col(count_col) / F.lit(total) * F.lit(100.0))

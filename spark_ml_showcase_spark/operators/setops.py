@@ -6,7 +6,7 @@ Reference citations: U1 union-all accumulation
 
 Semantics traps preserved/documented:
 - ``union``/``unionAll`` are positional and bag-semantic (no dedup). The
-  engine prefers ``union_by_name`` — positional union silently mismatches
+  engine prefers ``unionByName`` — positional union silently mismatches
   columns when schemas drift.
 - ``subtract`` is EXCEPT DISTINCT: it DEDUPS the left side as well as
   removing right-side rows. The reference leans on this implicitly for its
@@ -25,13 +25,6 @@ def union_all(*dfs: DataFrame) -> DataFrame:
     (the reference's accumulator pattern) is fine: Catalyst flattens nested
     unions into one n-ary Union node."""
     return reduce(DataFrame.union, dfs)
-
-
-def union_by_name(*dfs: DataFrame, allow_missing: bool = False) -> DataFrame:
-    """Name-resolved union — the engine default."""
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), dfs
-    )
 
 
 def subtract(left: DataFrame, right: DataFrame) -> DataFrame:

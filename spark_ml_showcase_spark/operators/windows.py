@@ -31,30 +31,6 @@ def ordered_window(partition_by: list[str], order_by: list[tuple[str, str]]) -> 
     return Window.partitionBy(*partition_by).orderBy(*cols)
 
 
-def with_row_number(df: DataFrame, partition_by: list[str],
-                    order_by: list[tuple[str, str]], alias: str = "rn") -> DataFrame:
-    return df.withColumn(alias, F.row_number().over(ordered_window(partition_by, order_by)))
-
-
-def with_lag_lead(df: DataFrame, col: str, partition_by: list[str],
-                  order_by: list[tuple[str, str]], offset: int = 1) -> DataFrame:
-    w = ordered_window(partition_by, order_by)
-    return df.withColumns({
-        f"{col}_lag": F.lag(col, offset).over(w),
-        f"{col}_lead": F.lead(col, offset).over(w),
-    })
-
-
-def running_agg(df: DataFrame, col: str, partition_by: list[str],
-                order_by: list[tuple[str, str]], agg=F.sum,
-                alias: str | None = None) -> DataFrame:
-    """Cumulative aggregate (rows unbounded-preceding → current)."""
-    w = ordered_window(partition_by, order_by).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return df.withColumn(alias or f"running_{col}", agg(col).over(w))
-
-
 def tumbling(df: DataFrame, ts_col: str, duration: str, keys: list[str],
              **aggs: Column) -> DataFrame:
     """Tumbling event-time window aggregation, e.g. duration='1 hour'.

@@ -480,11 +480,8 @@ def rrf_fusion_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_filter=F.col("doc_id") % 25 == 0,
     ).select("query_id", "cand_id", F.col("rank").alias("_ra"))
     emb = cat.embeddings
-    # "seq" = the Arrow fold that is BIT-identical to the HOF cosine
-    # (r15): the oracle's rank parity is preserved by construction and
-    # the interpreted-HOF cost of the dense leg drops ~3×
     dense = similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") % 25 == 0), 10, vectorized="seq"
+        emb, emb.filter(F.col("vec_id") % 25 == 0), 10
     ).select("query_id", "cand_id", F.col("rank").alias("_rb"))
     fused = sparse.join(dense, ["query_id", "cand_id"], "full").select(
         "query_id",
@@ -533,14 +530,11 @@ def rrf_fusion_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = cat.embeddings
     queries = emb.filter(F.col("vec_id") % 25 == 0)
-    # vectorized=True on BOTH dense legs: this query is rows-only (no
-    # oracle rank-parity to protect) and the interpreted HOF cosine was
-    # the measured cost at sf0.1 (probe leg 6.7 s → ~2 s Arrow); both
-    # fusions use the same scorer, so the overlap measurement is
-    # internally consistent.
-    exact = similarity.brute_force_topk(
-        emb, queries, k_leg, vectorized=True
-    ).select("query_id", "cand_id", F.col("rank").alias("_rb"))
+    # both fusions score with the same Arrow cosine, so the overlap
+    # measurement is internally consistent
+    exact = similarity.brute_force_topk(emb, queries, k_leg).select(
+        "query_id", "cand_id", F.col("rank").alias("_rb")
+    )
     # suite-level index cache (r12): same (fixture, n_lists=8, seed=40)
     # quantizer as ann_recall_report / ivf_topk — built once, probed here
     import os as _os
@@ -555,7 +549,7 @@ def rrf_fusion_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed=40,
     )
     approx = similarity.ivf_probe(
-        assigned, cent, queries, k_leg, n_probe=4, vectorized=True
+        assigned, cent, queries, k_leg, n_probe=4
     ).select("query_id", "cand_id", F.col("rank").alias("_rb"))
 
     def fuse(dense: DataFrame) -> DataFrame:
@@ -1027,7 +1021,7 @@ def rbo_sparse_vs_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "cand_id", F.col("rank").alias("_ra"))
     emb = cat.embeddings
     dense = similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") % 50 == 0), 10, vectorized="seq"
+        emb, emb.filter(F.col("vec_id") % 50 == 0), 10
     ).select("query_id", "cand_id", F.col("rank").alias("_rb"))
     coef = F.element_at(
         F.array(*[F.lit(c) for c in _RBO_C]),

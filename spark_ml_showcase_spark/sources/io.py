@@ -313,63 +313,6 @@ def write_orc(
     writer.orc(path)
 
 
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    *,
-    target_file_mb: int = 128,
-    sort_by: list[str] | None = None,
-) -> int:
-    """Compact a parquet directory's many small files into
-    ceil(bytes / target_file_mb) files — the maintenance pass every
-    append-only sink eventually needs (streaming file sinks, the
-    foreachBatch LSH index, per-micro-batch appends): at scale, file
-    COUNT drives scan planning and listing cost as much as bytes, and a
-    directory that gained 4 tiny files per micro-batch for a week plans
-    thousands of splits for megabytes of data.
-
-    Reads the directory, repartitions to the target count (optionally
-    range-sorting by ``sort_by`` so downstream min/max row-group pruning
-    works), writes to a sibling staging dir, then atomically swaps.
-    Returns the new file count. Safe against readers holding the OLD
-    listing only in the local/test context — a production lake does this
-    under a table format's transaction (OPTIMIZE/rewrite_data_files);
-    the Spark-side plan is identical.
-    """
-    import math
-    import shutil
-
-    # recover from a prior crashed compaction: a leftover .old/.compacting
-    # would make the renames below fail on every subsequent run
-    shutil.rmtree(path.rstrip("/") + ".old", ignore_errors=True)
-    shutil.rmtree(path.rstrip("/") + ".compacting", ignore_errors=True)
-    df = spark.read.parquet(path)
-    total = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    out = df.repartitionByRange(n, *sort_by) if sort_by else df.repartition(n)
-    staging = path.rstrip("/") + ".compacting"
-    out.write.mode("overwrite").parquet(staging)
-    old = path.rstrip("/") + ".old"
-    # two renames = a crash window where `path` is briefly absent (data
-    # safe in .old, recovered by the pre-clean above on the next run) —
-    # acceptable for the local/test context; a production lake runs this
-    # under a table-format transaction, as the docstring says
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return sum(
-        1
-        for _, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-
-
 def write_report(
     df: DataFrame, path: str, *, fmt: str = "txt", max_rows: int = 10_000
 ) -> str:

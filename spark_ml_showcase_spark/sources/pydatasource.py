@@ -26,10 +26,8 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 FORMAT_NAME = "synthdocs"
@@ -137,113 +135,3 @@ class SyntheticDocsStreamReader(SimpleDataSourceStreamReader):
 
     def readBetweenOffsets(self, start: dict, end: dict):
         return list(_gen(int(start["idx"]), int(end["idx"]), self.n_sources))
-
-
-# ---------------------------------------------------------------------------
-# Write half: sharded-JSONL training-data export with a commit manifest.
-# ---------------------------------------------------------------------------
-
-from dataclasses import dataclass  # noqa: E402 (section-local, stdlib)
-
-
-@dataclass
-class ShardCommit(WriterCommitMessage):
-    """Per-task commit: the shard file it wrote and its row/byte tally."""
-
-    shard: str
-    n_rows: int
-    n_bytes: int
-
-
-class JsonlShardWriter(DataSourceWriter):
-    """Each write task streams its partition to ONE ``shard-<pid>.jsonl``
-    file under ``path``. A retried task rewrites the same file from
-    scratch (``open(..., "w")`` truncates) with identical deterministic
-    content, so retries are idempotent per partition; readers must gate
-    on the manifest, which only appears on success. The driver-side
-    ``commit()`` gets every task's tally and writes ``MANIFEST.json`` —
-    the "this export is complete and contains exactly these shards/rows"
-    marker a training job consumes. ``abort()`` leaves no manifest, so a
-    failed export stays invisible: the classic output-committer
-    contract, implemented in ~40 lines of Python."""
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-
-    def write(self, iterator) -> ShardCommit:
-        import json
-        import os
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
-        shard = f"shard-{pid:05d}.jsonl"
-        n_rows = n_bytes = 0
-
-        def jsonable(v):
-            # timestamps/dates → ISO strings, Decimal → str, binary →
-            # hex: JSONL must accept any Spark row, not just scalars
-            import base64
-            import datetime
-            import decimal
-
-            if isinstance(v, (datetime.datetime, datetime.date)):
-                return v.isoformat()
-            if isinstance(v, decimal.Decimal):
-                return str(v)
-            if isinstance(v, (bytes, bytearray)):
-                return base64.b64encode(bytes(v)).decode()
-            raise TypeError(f"not JSON-serializable: {type(v)}")
-
-        with open(os.path.join(self.path, shard), "w") as f:
-            for row in iterator:
-                line = (
-                    json.dumps(row.asDict(), sort_keys=True, default=jsonable)
-                    + "\n"
-                )
-                f.write(line)
-                n_rows += 1
-                n_bytes += len(line)
-        return ShardCommit(shard=shard, n_rows=n_rows, n_bytes=n_bytes)
-
-    def commit(self, messages) -> None:
-        import json
-        import os
-
-        shards = [
-            {"shard": m.shard, "n_rows": m.n_rows, "n_bytes": m.n_bytes}
-            for m in messages
-            if m is not None
-        ]
-        manifest = {
-            "shards": sorted(shards, key=lambda s: s["shard"]),
-            "total_rows": sum(s["n_rows"] for s in shards),
-        }
-        with open(os.path.join(self.path, "MANIFEST.json"), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-
-    def abort(self, messages) -> None:
-        pass  # no manifest → the partial export is never visible
-
-
-class JsonlShardDataSource(DataSource):
-    """``df.write.format("jsonlshards").option("path", d).save()`` after
-    ``spark.dataSource.register(JsonlShardDataSource)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonlshards"
-
-    def writer(self, schema, overwrite: bool) -> JsonlShardWriter:
-        return JsonlShardWriter(self.options)
-
-
-def write_jsonl_shards(df, path: str, *, shards: int | None = None) -> None:
-    """Export ``df`` as sharded JSONL + manifest; ``shards`` repartitions
-    first (one output file per partition)."""
-    spark = df.sparkSession
-    spark.dataSource.register(JsonlShardDataSource)
-    if shards is not None:
-        df = df.repartition(shards)
-    df.write.format("jsonlshards").option("path", path).mode("append").save()

@@ -252,21 +252,6 @@ def snapshot_diff(
     )
 
 
-def compact_snapshot(
-    spark: SparkSession, table_dir: str, target_files: int = 1
-) -> int:
-    """Commit a new version with the SAME rows as the latest, rewritten
-    into ``target_files`` parquet files — the small-files fix for tables
-    grown by many incremental appends (at 100 TB, thousands of tiny
-    files per partition turn scan planning and open() overhead into the
-    bottleneck). Readers of older versions are untouched: the parent's
-    files stay on disk until :func:`vacuum` after version expiry.
-    ``snapshot_diff(parent, compacted)`` is empty by construction —
-    pinned in tests."""
-    latest = read_snapshot(spark, table_dir)
-    return write_snapshot(latest.coalesce(target_files), table_dir)
-
-
 def expire_versions(table_dir: str, keep_last: int) -> list[int]:
     """Drop the manifests of all but the newest ``keep_last`` versions
     (their data files remain until :func:`vacuum`). Returns the expired

@@ -357,65 +357,3 @@ def stream_minhash_dedup(
     return s.read.parquet(*final_parts).select(
         F.col("_id").alias(id_col), F.col("_sig").alias("signature")
     )
-
-
-def stream_decontaminate(
-    doc_stream: DataFrame,
-    benchmark: DataFrame,
-    *,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """Streaming benchmark decontamination: filter a document STREAM
-    against a STATIC benchmark set. Returns ``(clean, hits)`` — both
-    streaming DataFrames.
-
-    Two complementary mechanisms, both stateless (append-mode safe, no
-    watermark needed):
-
-    - ``clean``: the benchmark's distinct n-gram xxhash64 set is
-      collected once and baked into the plan as a LITERAL array;
-      a doc survives iff ``arrays_overlap(doc_gram_hashes, bench)`` is
-      false. Pure row-local expression → works on any stream with zero
-      state. Bounded by the benchmark being eval-set-sized (thousands
-      of docs → ~10^5-10^6 grams); a benchmark too large for a literal
-      belongs in the foreachBatch form (per-batch broadcast join, same
-      batch operator: ``operators.decontaminate.ngram_decontaminate``).
-    - ``hits``: the contaminated (doc_id, gram_hash) evidence rows via
-      a STREAM-STATIC left-semi join (natively supported: the static
-      side broadcasts, each micro-batch probes it) — the audit trail a
-      compliance pipeline keeps.
-
-    Same tokenizer/hash as the batch operator (``TX.shingle_array_udf``
-    + xxhash64), so stream and batch classify documents identically
-    (parity-tested).
-    """
-    from spark_ml_showcase_spark.functions import text as TX
-
-    bench_sh = (
-        benchmark.select(
-            F.explode(TX.shingle_array_udf(n)(F.col(text_col))).alias("_sh")
-        )
-        .select(F.xxhash64("_sh").alias("_h"))
-        .distinct()
-    )
-    bench_hashes = [r._h for r in bench_sh.collect()]
-    grams_arr = F.transform(
-        TX.shingle_array_udf(n)(F.col(text_col)), lambda s: F.xxhash64(s)
-    )
-    with_grams = doc_stream.withColumn("_ghs", grams_arr)
-    clean = (
-        with_grams.filter(
-            (F.size("_ghs") == 0)
-            | ~F.arrays_overlap("_ghs", F.lit(bench_hashes))
-        ).drop("_ghs")
-        if bench_hashes
-        else doc_stream
-    )
-    gram_rows = doc_stream.select(
-        F.col(id_col),
-        F.explode(TX.shingle_array_udf(n)(F.col(text_col))).alias("_sh"),
-    ).select(id_col, F.xxhash64("_sh").alias("_h"))
-    hits = gram_rows.join(F.broadcast(bench_sh), "_h", "left_semi")
-    return clean, hits

@@ -524,74 +524,3 @@ def upsert_latest_per_key(
         # zero input → no batch ever ran → empty state, same schema
         return local_frame(s, [], stream_df.schema)
     return s.read.parquet(cur_dir)
-
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` (arbitrary-stateful v2) talks to
-    its state server over protobuf; without ``google.protobuf`` the
-    driver worker crashes at init. Gate, per the environment rule:
-    no installs — the operator is real, the dependency is declared."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-stateful API (state-store v2: typed state
-    handles, optional per-state TTL, timers) and the successor to
-    ``running_totals_stateful``'s ``applyInPandasWithState``. Same
-    output contract as that operator: one (user_id, n_events,
-    total_value) row per user per micro-batch, last row per user = the
-    final state.
-
-    Requires the RocksDB state store provider (set on the stream's
-    session here) AND ``google.protobuf`` (check :func:`tws_available`
-    first — this container ships without it, so the operator is
-    exercised wherever the dependency exists and skipped cleanly here).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf; "
-            "use running_totals_stateful (applyInPandasWithState) instead"
-        )
-
-    class Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n bigint, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._agg.get() if self._agg.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    s = events.sparkSession
-    s.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        Totals(),
-        "user_id bigint, n_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )

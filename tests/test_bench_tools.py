@@ -160,8 +160,9 @@ def test_bench_diff_auto_acks_flat_byte_stage_growth(tmp_path, capsys, monkeypat
 
 def test_plan_digest_masks_per_process_tokens_but_not_widths():
     """``plan_audit.plan_digest`` is equal across processes (ids,
-    plan_ids, stage ids, the run_dir root, the in-line order of a
-    distinct-aggregate Expand) and changes with a repartition width."""
+    lambda-variable suffixes, plan_ids, stage ids, the run_dir root, the
+    in-line order of a distinct-aggregate Expand) and changes with a
+    repartition width."""
     import tempfile
 
     pa = _load("plan_audit")
@@ -175,7 +176,9 @@ def test_plan_digest_masks_per_process_tokens_but_not_widths():
             f"+- Exchange hashpartitioning(x#{a}L, {width}), "
             f"REPARTITION_BY_NUM, [plan_id={a + b}]",
             f"   +- ShuffleQueryStage {b}",
-            f"      +- FileScan [file:{tmp}/smss_run_{root}/store/{a}]",
+            f"      +- Filter (size(filter(v#{a}, lambdafunction((lambda "
+            f"x_{b}#{a} > 0), lambda x_{b}#{a}, false)), false) > 1)",
+            f"         +- FileScan [file:{tmp}/smss_run_{root}/store/{a}]",
         ])
 
     base = pa.plan_digest(plan((12, 40), 4, True, "ab"))

@@ -4,6 +4,8 @@ measured from the written parquet footers."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -11,6 +13,39 @@ from pyspark.sql import functions as F
 from spark_ml_showcase_spark.operators import clustering
 
 SF = "/root/testdata/sf0.001"
+
+
+def file_band_overlap(path: str, col: str, lo: float, hi: float) -> tuple[int, int]:
+    """Skipping observable: (files whose footer [min, max] on ``col``
+    intersects [lo, hi], total files) — read from parquet metadata only,
+    no data pages. This is exactly the statistic the scan's row-group
+    pruning consults, so the tests below measure the skipping payoff of
+    each clustered layout with it."""
+    import pyarrow.parquet as pq
+
+    touched = total = 0
+    for root, _, files in os.walk(path):
+        for f in sorted(files):
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(root, f)).metadata
+            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+            if col not in idx:
+                raise KeyError(f"{col!r} not in {sorted(idx)}")
+            fmin = fmax = None
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx[col]).statistics
+                if st is None or not st.has_min_max:
+                    fmin, fmax = float("-inf"), float("inf")
+                    break
+                fmin = st.min if fmin is None else min(fmin, st.min)
+                fmax = st.max if fmax is None else max(fmax, st.max)
+            if fmin is None:
+                continue  # empty file
+            total += 1
+            if fmax >= lo and fmin <= hi:
+                touched += 1
+    return touched, total
 
 
 def test_zorder_key_interleaves_known_bits(spark):
@@ -79,12 +114,12 @@ def test_range_cluster_files_skip_value_band(spark):
     path = clustering.materialize_events_clustered(
         spark, SF, mode="value_range"
     )
-    touched, total = clustering.file_band_overlap(path, "value", 200.0, 300.0)
+    touched, total = file_band_overlap(path, "value", 200.0, 300.0)
     assert total >= 4
     # band is ~20% of the domain: a clustered layout touches a strict
     # minority of files; the unclustered source would touch all of them.
     assert touched / total <= 0.5, (touched, total)
-    src_touched, src_total = clustering.file_band_overlap(
+    src_touched, src_total = file_band_overlap(
         "/root/testdata/sf0.001/events.parquet", "value", 200.0, 300.0
     )
     assert src_touched == src_total  # no layout → no skipping
@@ -96,14 +131,14 @@ def test_zorder_files_skip_bands_in_both_dims(spark):
     zpath = clustering.materialize_events_clustered(
         spark, SF, mode="zorder_value_user"
     )
-    vt, total = clustering.file_band_overlap(zpath, "value", 200.0, 300.0)
+    vt, total = file_band_overlap(zpath, "value", 200.0, 300.0)
     # user_id domain: read it from the data to band ~20%
     from spark_ml_showcase_spark.sources.catalog import Catalog
 
     ev = Catalog(spark, SF).events
     lo, hi = ev.agg(F.min("user_id"), F.max("user_id")).first()
     span = (hi - lo) or 1
-    ut, total2 = clustering.file_band_overlap(
+    ut, total2 = file_band_overlap(
         zpath, "user_id", lo + 0.4 * span, lo + 0.6 * span
     )
     assert total >= 4 and total2 == total
@@ -114,7 +149,7 @@ def test_zorder_files_skip_bands_in_both_dims(spark):
     vpath = clustering.materialize_events_clustered(
         spark, SF, mode="value_range"
     )
-    u1, t1 = clustering.file_band_overlap(
+    u1, t1 = file_band_overlap(
         vpath, "user_id", lo + 0.4 * span, lo + 0.6 * span
     )
     assert u1 == t1

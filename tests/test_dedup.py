@@ -7,7 +7,45 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from spark_ml_showcase_spark.functions import text as T
 from spark_ml_showcase_spark.operators import dedup
+
+
+def simhash(
+    text_col: str | Column, *, bits: int = dedup._SIMHASH_BITS, ngram: int = 3
+) -> Column:
+    """SimHash of the n-gram shingle set as one composable Column
+    expression: per-shingle xxhash64 votes ±1 on each of ``bits`` bit
+    positions; the packed sign vector is the hash. The reference that
+    ``dedup._simhash_agg`` (the explode → conditional-sum aggregate that
+    ``simhash_near_dup`` runs) must reproduce exactly."""
+    c = F.col(text_col) if isinstance(text_col, str) else text_col
+    toks = T.shingles(c, ngram)
+    # Hash each shingle ONCE up front — the per-bit vote extraction below
+    # then works on the precomputed long (shiftright+mask), instead of
+    # re-evaluating xxhash64 `bits` times per shingle (Catalyst does not
+    # CSE across the unrolled bit expressions).
+    hashes = F.transform(toks, lambda t: F.xxhash64(t))
+
+    def bit_votes(h: Column) -> Column:
+        return F.array(
+            *[
+                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(
+                    F.lit(-1)
+                )
+                for i in range(bits)
+            ]
+        )
+
+    votes = F.aggregate(
+        hashes,
+        F.array_repeat(F.lit(0), bits),
+        lambda acc, h: F.zip_with(acc, bit_votes(h), lambda a, v: a + v),
+    )
+    signs = F.transform(votes, lambda v: F.when(v >= 0, F.lit(1)).otherwise(F.lit(0)))
+    return F.aggregate(
+        signs, F.lit(0).cast("bigint"), lambda acc, s: acc * 2 + s
+    )
 
 
 def minhash_signature(shingle_col: Column, k: int = 32) -> Column:
@@ -121,7 +159,7 @@ def test_signature_forms_agree(spark):
     df = _docs(spark)
     sh_col = {
         r.doc_id: r.h
-        for r in df.select("doc_id", dedup.simhash("text").alias("h"))
+        for r in df.select("doc_id", simhash("text").alias("h"))
         .filter(F.size(T.shingles("text", 3)) > 0)
         .collect()
     }

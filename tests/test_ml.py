@@ -196,6 +196,8 @@ def test_quality_filter_persistence_roundtrip_fresh_session(spark, tmp_path):
     (judge verdict r5 next-round #7)."""
     import os
 
+    from pyspark.ml import PipelineModel
+
     from spark_ml_showcase_spark.ml import quality_filter as qf
 
     docs_rows = [
@@ -207,11 +209,11 @@ def test_quality_filter_persistence_roundtrip_fresh_session(spark, tmp_path):
     before = {r.doc_id: r.quality_prob for r in qf.score_quality(model, docs).collect()}
 
     path = os.path.join(str(tmp_path), "qf_model")
-    qf.save_quality_filter(model, path)
+    model.write().overwrite().save(path)
 
     fresh = spark.newSession()
     docs2 = fresh.createDataFrame(docs_rows, "doc_id bigint, text string")
-    loaded = qf.load_quality_filter(path)
+    loaded = PipelineModel.load(path)
     after = {r.doc_id: r.quality_prob for r in qf.score_quality(loaded, docs2).collect()}
     assert after == before  # bit-for-bit on the rounded probabilities
 

@@ -104,11 +104,11 @@ def test_package_udf_runs_from_another_working_directory(tmp_path, launcher):
         f"sys.path.insert(0, {REPO!r})\n"
         "from pyspark.sql import functions as F\n"
         "from spark_ml_showcase_spark.session import session_builder\n"
-        "from spark_ml_showcase_spark.functions.similarity import cosine_pandas_udf\n"
+        "from spark_ml_showcase_spark.functions.similarity import cosine_udf\n"
         "spark = session_builder('pyworker-cwd', master='local[1]', shuffle_partitions=1).getOrCreate()\n"
         "print(spark.sparkContext.getConf().get('spark.executorEnv.PYTHONPATH'))\n"
         "df = spark.range(3).select(F.array(F.lit(1.0), F.col('id').cast('double')).alias('v'))\n"
-        "print(sorted(round(r.c, 6) for r in df.select(cosine_pandas_udf()('v', 'v').alias('c')).collect()))\n"
+        "print(sorted(round(r.c, 6) for r in df.select(cosine_udf()('v', 'v').alias('c')).collect()))\n"
         "spark.stop()\n"
     )
     if launcher == "python":

@@ -54,16 +54,9 @@ def test_zero_guarded_log(spark):
     assert vals[2] == pytest.approx(1.0)  # NATURAL log, not log10
 
 
-def test_filter_eq_and_suffix(spark):
+def test_filter_suffix(spark):
     hosts = spark.createDataFrame(
         [("a.de",), ("b.ca",), ("c.sg",), ("d.com",)], "host string"
     )
-    assert R.filter_eq(hosts, "host", "a.de").count() == 1
     got = {r[0] for r in R.filter_suffix(hosts, "host", ".de", ".ca").collect()}
     assert got == {"a.de", "b.ca"}
-
-
-def test_percentage_of_total(spark):
-    df = spark.createDataFrame([(25,), (75,)], "count int")
-    got = sorted(r["percentage"] for r in R.percentage_of_total(df, "count", 100.0).collect())
-    assert got == [25.0, 75.0]

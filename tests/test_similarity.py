@@ -13,6 +13,36 @@ from spark_ml_showcase_spark.functions import similarity, vectors as V
 from spark_ml_showcase_spark.sources import io
 
 
+def quantize_int8(
+    df,
+    *,
+    vec_col: str = "embedding",
+    q_col: str = "q_vec",
+    scale_col: str = "q_scale",
+):
+    """Symmetric per-vector int8 quantization in pure column math
+    (``transform``/``aggregate``, no UDF): ``scale = max(|x|) / 127``,
+    ``q[i] = round(x[i] / scale)`` in [-127, 127]. The reference that
+    ``similarity.quantize_int8_np`` is pinned bit-identical to."""
+    c = similarity.as_double(vec_col)
+    # coalesce: array_max of an EMPTY array is NULL — empty and all-zero
+    # vectors both take the scale-1.0 guard (q = [], no div-by-zero)
+    amax = F.coalesce(
+        F.array_max(F.transform(c, lambda x: F.abs(x))), F.lit(0.0)
+    )
+    df = df.withColumn(
+        scale_col,
+        F.when(amax == 0.0, F.lit(1.0)).otherwise(amax / F.lit(127.0)),
+    )
+    return df.withColumn(
+        q_col,
+        F.transform(
+            similarity.as_double(vec_col),
+            lambda x: F.round(x / F.col(scale_col)).cast("tinyint"),
+        ),
+    )
+
+
 def _vecs(spark, n=40, dim=8, seed=7):
     rng = np.random.RandomState(seed)
     raw = rng.randn(n, dim)
@@ -124,7 +154,7 @@ def test_embedding_near_dup_banding_recall(spark):
 
 def test_cosine_pandas_udf_matches_expression(spark):
     _, _, df = _vecs(spark, n=15)
-    pudf = similarity.cosine_pandas_udf()
+    pudf = similarity.cosine_udf()
     paired = df.alias("a").crossJoin(df.alias("b")).select(
         F.col("a.embedding").alias("ea"), F.col("b.embedding").alias("eb")
     )
@@ -137,18 +167,42 @@ def test_cosine_pandas_udf_matches_expression(spark):
 
 
 def test_brute_force_topk_seq_scorer_bit_identical_to_hof(spark):
-    """vectorized="seq" (r15): the whole brute_force_topk output —
-    scores AND ranks — must be row-identical to the codegen HOF path,
-    because the seq Arrow fold reproduces F.aggregate's summation
-    order exactly. This is what licenses the oracle-checked retrieval
-    queries (cosine_topk_bruteforce, rrf_fusion_docs,
-    rbo_sparse_vs_dense) to take the Arrow speedup."""
+    """The whole brute_force_topk output — scores AND ranks — is
+    row-identical to the same plan scored by the codegen HOF, because
+    the Arrow fold reproduces F.aggregate's summation order exactly.
+    This is what licenses the oracle-checked retrieval queries
+    (cosine_topk_bruteforce, rrf_fusion_docs, rbo_sparse_vs_dense) to
+    score through it."""
+    from pyspark.sql.window import Window
+
     _, _, df = _vecs(spark, n=60)
     q = df.filter(F.col("vec_id") < 8)
     k = lambda frame: sorted(tuple(r) for r in frame.collect())
-    hof = similarity.brute_force_topk(df, q, 5)
-    seq = similarity.brute_force_topk(df, q, 5, vectorized="seq")
-    assert k(hof) == k(seq)
+    hof = (
+        df.select(
+            F.col("vec_id").alias("cand_id"),
+            similarity.as_double("embedding").alias("_cv"),
+        )
+        .crossJoin(
+            q.select(
+                F.col("vec_id").alias("query_id"),
+                similarity.as_double("embedding").alias("_qv"),
+            )
+        )
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .withColumn("cosine", F.round(V.cosine("_qv", "_cv"), 6))
+        .withColumn(
+            "rank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("cosine").desc(), F.col("cand_id").asc()
+                )
+            ),
+        )
+        .filter(F.col("rank") <= 5)
+        .select("query_id", "cand_id", "cosine", "rank")
+    )
+    assert k(similarity.brute_force_topk(df, q, 5)) == k(hof)
 
 
 def test_vector_functions_basic(spark):
@@ -285,12 +339,12 @@ def test_quantize_int8_bounds_and_scale(spark):
     """q ∈ [−127, 127] tinyint, scale = max|x|/127, zero vector safe."""
     rows = [(0, [0.5, -1.0, 0.25, 0.0]), (1, [0.0, 0.0, 0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = {r.vec_id: r for r in similarity.quantize_int8(df).collect()}
+    out = {r.vec_id: r for r in quantize_int8(df).collect()}
     assert out[0].q_scale == 1.0 / 127.0
     assert out[0].q_vec == [64, -127, 32, 0]  # round(0.5*127)=63.5→64
     assert out[1].q_scale == 1.0  # zero vector: guard, not div-by-zero
     assert out[1].q_vec == [0, 0, 0, 0]
-    assert dict(similarity.quantize_int8(df).dtypes)["q_vec"] == "array<tinyint>"
+    assert dict(quantize_int8(df).dtypes)["q_vec"] == "array<tinyint>"
 
 
 def test_quantized_topk_recall_vs_float_truth(spark):
@@ -347,13 +401,13 @@ def test_quantize_int8_np_parity(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     ref = {r.vec_id: (r.q_vec, r.q_scale)
-           for r in similarity.quantize_int8(df).collect()}
+           for r in quantize_int8(df).collect()}
     got = {r.vec_id: (r.q_vec, r.q_scale)
            for r in similarity.quantize_int8_np(df).collect()}
     assert ref == got
     _, _, big = _vecs(spark, n=300, dim=16, seed=5)
     ref = {r.vec_id: (r.q_vec, r.q_scale)
-           for r in similarity.quantize_int8(big).collect()}
+           for r in quantize_int8(big).collect()}
     got = {r.vec_id: (r.q_vec, r.q_scale)
            for r in similarity.quantize_int8_np(big).collect()}
     assert ref == got
@@ -940,38 +994,135 @@ def test_cosine_pandas_udf_seq_bit_identical_to_hof(spark):
     """r12 judge item #2's parity gate: the sequential-fold Arrow
     cosine must be BIT-identical (not merely close) to the V.cosine
     codegen HOF — that identity is what licenses using it inside the
-    oracle-checked maxsim_late_interaction. The pairwise-summed numpy
-    variant is NOT bit-identical (checked here as the contrast that
-    motivates the _seq form)."""
+    oracle-checked maxsim_late_interaction and every top-k. 64 dims is
+    the embedding fixture's width."""
     rng = np.random.RandomState(42)
     rows = [
         (
             i,
-            [float(x) for x in rng.randn(16)],
-            [float(x) for x in rng.randn(16)],
+            [float(x) for x in rng.randn(dim)],
+            [float(x) for x in rng.randn(dim)],
         )
+        for dim in (16, 64)
         for i in range(2000)
     ]
     df = spark.createDataFrame(rows, "i bigint, a array<float>, b array<float>")
     d = df.select(
+        F.size("a").alias("dim"),
         V.cosine(similarity.as_double("a"), similarity.as_double("b")).alias(
             "hof"
         ),
-        similarity.cosine_pandas_udf_seq()(
+        similarity.cosine_udf()(
             similarity.as_double("a"), similarity.as_double("b")
         ).alias("seq"),
-        similarity.cosine_pandas_udf()(
-            similarity.as_double("a"), similarity.as_double("b")
-        ).alias("pairwise"),
     )
-    r = d.select(
+    r = d.groupBy("dim").agg(
         F.sum((F.col("hof") != F.col("seq")).cast("int")).alias("seq_diff"),
-        F.sum((F.col("hof") != F.col("pairwise")).cast("int")).alias(
-            "pw_diff"
+        F.count("seq").alias("n"),
+    )
+    assert sorted(tuple(x) for x in r.collect()) == [(16, 0, 2000), (64, 0, 2000)]
+
+
+def _zero_vector_ranks(spark) -> dict:
+    """Score a candidate set holding one zero vector (vec_id 9) through
+    every top-k entry point and the HOF; returns, per scorer, the
+    (cosine, rank, is_last) of the zero candidate for each query."""
+    rows = [
+        (i, [float(x) for x in np.random.RandomState(i).randn(4)])
+        for i in range(6)
+    ] + [(9, [0.0, 0.0, 0.0, 0.0])]
+    cands = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    queries = cands.filter(F.col("vec_id") < 2)
+    assigned, cent = similarity.build_ivf_index(cands, n_lists=2, seed=40)
+    frames = {
+        "brute_force_topk": similarity.brute_force_topk(cands, queries, 10),
+        "ivf_probe": similarity.ivf_probe(
+            assigned, cent, queries, 10, n_probe=2
         ),
-    ).first()
-    assert r.seq_diff == 0
-    assert r.pw_diff > 0  # the contrast: pairwise order really differs
+        "quantized_topk": similarity.quantized_topk(cands, queries, 10),
+    }
+    out = {}
+    for name, frame in frames.items():
+        got = frame.collect()
+        last = {}
+        for r in got:
+            last[r.query_id] = max(last.get(r.query_id, 0), r["rank"])
+        out[name] = sorted(
+            (r.query_id, r.cosine, r["rank"] == last[r.query_id])
+            for r in got
+            if r.cand_id == 9
+        )
+    hof = cands.filter(F.col("vec_id") == 9).select(
+        V.cosine(
+            similarity.as_double("embedding"), F.array(*[F.lit(1.0)] * 4)
+        ).alias("c")
+    )
+    out["V.cosine"] = [r.c for r in hof.collect()]
+    return out
+
+
+_ZERO_VECTOR_WANT = {
+    "brute_force_topk": [(0, None, True), (1, None, True)],
+    "ivf_probe": [(0, None, True), (1, None, True)],
+    "quantized_topk": [(0, None, True), (1, None, True)],
+    "V.cosine": [None],
+}
+
+
+def test_zero_vector_scores_null_and_ranks_last(spark):
+    """A zero-vector candidate gets a NULL cosine ranked last on every
+    top-k entry point and on the HOF, with no DIVIDE_BY_ZERO under ANSI
+    (the HOF divides through try_divide, the Arrow kernel maps a zero
+    denominator to NULL), the answer DuckDB gives for ``x / 0.0``."""
+    assert _zero_vector_ranks(spark) == _ZERO_VECTOR_WANT
+
+
+def test_zero_vector_scores_null_on_a_plain_session(tmp_path):
+    """Same answers on a stock ``local[4]`` session (ANSI on, stock
+    Python daemon, 200 shuffle partitions), run in a subprocess because
+    one process holds one SparkContext."""
+    import json
+    import subprocess
+    import sys
+
+    from conftest import REPO
+
+    code = (
+        "import json, sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "from tests.test_similarity import _zero_vector_ranks\n"
+        "spark = (SparkSession.builder.master('local[4]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "assert spark.conf.get('spark.sql.ansi.enabled') == 'true'\n"
+        "print(json.dumps(_zero_vector_ranks(spark)))\n"
+        "spark.stop()\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    want = {k: [list(t) if isinstance(t, tuple) else t for t in v]
+            for k, v in _ZERO_VECTOR_WANT.items()}
+    assert got == want
+
+
+def test_cosine_udf_null_input_and_dimension_mismatch(spark):
+    """A NULL vector scores NULL, as on the HOF; a pair whose dimensions
+    differ raises a ValueError naming both lengths (the HOF's zip_with
+    would pad the shorter side with NULLs and return NULL silently)."""
+    schema = "a array<double>, b array<double>"
+    ok = spark.createDataFrame([(None, [1.0, 2.0]), ([3.0, 4.0], [4.0, 3.0])], schema)
+    got = [r.c for r in ok.select(similarity.cosine_udf()("a", "b").alias("c")).collect()]
+    assert got == [None, 24.0 / 25.0]
+    bad = spark.createDataFrame([([1.0, 2.0], [1.0, 2.0, 3.0])], schema)
+    with pytest.raises(Exception, match="different dimensions: 2 and 3"):
+        bad.select(similarity.cosine_udf()("a", "b")).collect()
 
 
 def test_embedding_drift_by_source_matches_numpy(spark, tmp_path):

@@ -238,26 +238,6 @@ def test_catalog_changed_inference_conf_misses_memo(spark, tmp_path):
     assert hit == 0 and miss >= 1 and hit_again == 0
 
 
-def test_compact_parquet_dir(spark, tmp_path):
-    from spark_ml_showcase_spark.sources.io import compact_parquet_dir
-
-    d = os.path.join(str(tmp_path), "many")
-    # 12 tiny appended files, the append-only-sink pathology
-    for i in range(12):
-        spark.createDataFrame(
-            [(i * 10 + j, f"v{i}_{j}") for j in range(10)], "k bigint, v string"
-        ).coalesce(1).write.mode("append").parquet(d)
-    n_before = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-    assert n_before == 12
-    before = {(r.k, r.v) for r in spark.read.parquet(d).collect()}
-
-    n_after = compact_parquet_dir(spark, d, target_file_mb=128, sort_by=["k"])
-    assert n_after == 1
-    after = {(r.k, r.v) for r in spark.read.parquet(d).collect()}
-    assert after == before and len(after) == 120
-    assert not os.path.exists(d + ".old") and not os.path.exists(d + ".compacting")
-
-
 def test_python_datasource_generates_on_executors(spark):
     from spark_ml_showcase_spark.sources.pydatasource import read_synth_docs
 
@@ -317,32 +297,6 @@ def test_python_datasource_stream_batches(spark):
     assert got == {f"src{i}": 500 for i in range(4)}
 
 
-def test_jsonl_shard_writer_with_manifest(spark, tmp_path):
-    import json
-
-    from spark_ml_showcase_spark.sources.pydatasource import write_jsonl_shards
-
-    df = spark.createDataFrame(
-        [(i, f"text {i}", i % 3) for i in range(100)],
-        "doc_id bigint, text string, bucket bigint",
-    )
-    out = os.path.join(str(tmp_path), "export")
-    write_jsonl_shards(df, out, shards=4)
-
-    manifest = json.load(open(os.path.join(out, "MANIFEST.json")))
-    assert manifest["total_rows"] == 100
-    assert len(manifest["shards"]) == 4
-    # shard tallies agree with the files themselves; rows roundtrip
-    seen = []
-    for s in manifest["shards"]:
-        lines = open(os.path.join(out, s["shard"])).read().splitlines()
-        assert len(lines) == s["n_rows"]
-        assert sum(len(l) + 1 for l in lines) == s["n_bytes"]
-        seen += [json.loads(l) for l in lines]
-    assert {r["doc_id"] for r in seen} == set(range(100))
-    assert all(r["text"] == f"text {r['doc_id']}" for r in seen)
-
-
 def test_read_parquet_ignore_corrupt_files(spark, tmp_path):
     """One garbage file among good parquet: the default read fails
     loudly; ignore_corrupt=True survives with exactly the good rows."""
@@ -359,44 +313,6 @@ def test_read_parquet_ignore_corrupt_files(spark, tmp_path):
         io.read_parquet(spark, d).count()
     ok = io.read_parquet(spark, d, ignore_corrupt=True)
     assert sorted(r.k for r in ok.collect()) == list(range(20))
-
-
-def test_jsonl_shard_writer_serializes_rich_types(spark, tmp_path):
-    """Timestamps/dates/decimals/binary export as ISO/str/base64 instead
-    of crashing the writer — the events fixture shape must be exportable."""
-    import json
-
-    from spark_ml_showcase_spark.sources.pydatasource import write_jsonl_shards
-
-    df = spark.sql(
-        "SELECT 1 AS id, TIMESTAMP'2024-01-02 03:04:05' AS ts, "
-        "DATE'2024-01-02' AS d, CAST(1.50 AS DECIMAL(10,2)) AS m, "
-        "X'DEAD' AS b"
-    )
-    out = os.path.join(str(tmp_path), "rich")
-    write_jsonl_shards(df, out, shards=1)
-    (line,) = open(os.path.join(out, "shard-00000.jsonl")).read().splitlines()
-    row = json.loads(line)
-    assert row["ts"].startswith("2024-01-02T03:04:05")
-    assert row["d"] == "2024-01-02" and row["m"] == "1.50" and row["b"] == "3q0="
-
-
-def test_compact_recovers_from_crashed_prior_run(spark, tmp_path):
-    """A leftover .old/.compacting dir from a killed compaction must not
-    wedge the next run."""
-    from spark_ml_showcase_spark.sources.io import compact_parquet_dir
-
-    d = os.path.join(str(tmp_path), "dir")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, v string").coalesce(
-        1
-    ).write.parquet(d)
-    os.makedirs(d + ".old")
-    with open(os.path.join(d + ".old", "stale"), "w") as f:
-        f.write("leftover from a crash")
-    os.makedirs(d + ".compacting")
-    assert compact_parquet_dir(spark, d) == 1
-    assert {r.k for r in spark.read.parquet(d).collect()} == {1, 2}
-    assert not os.path.exists(d + ".old")
 
 
 def _write(path: str, text: str) -> None:

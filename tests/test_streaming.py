@@ -512,48 +512,6 @@ def test_stream_minhash_dedup_resume_refuses_legacy_layouts(spark, tmp_path):
         )
 
 
-def test_stream_decontaminate_matches_batch(spark, tmp_path):
-    """Streaming decontamination (literal-set filter + stream-static
-    semi join) classifies docs exactly like the batch operator."""
-    from spark_ml_showcase_spark.operators import decontaminate as dc
-    from spark_ml_showcase_spark.streaming import corpus as sc_
-
-    docs = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "one two three four five six seven"),
-        (3, "alpha beta gamma delta epsilon different tail"),
-        (4, "totally unrelated words in this document here"),
-        (5, "tiny doc"),  # < n tokens → no shingles → always clean
-    ]
-    bench = spark.createDataFrame(
-        [(100, "prefix alpha beta gamma delta epsilon suffix")],
-        "doc_id bigint, text string",
-    )
-    d = os.path.join(str(tmp_path), "docs")
-    spark.createDataFrame(docs, "doc_id bigint, text string").coalesce(
-        1
-    ).write.parquet(d)
-
-    stream = se.stream_staged(spark, d, max_files_per_trigger=None)
-    clean_s, hits_s = sc_.stream_decontaminate(stream, bench, n=5)
-    got_clean = {
-        r.doc_id
-        for r in se.run_to_memory(clean_s, spark, output_mode="append").collect()
-    }
-    got_hit_docs = {
-        r.doc_id
-        for r in se.run_to_memory(hits_s, spark, output_mode="append").collect()
-    }
-
-    batch_docs = spark.createDataFrame(docs, "doc_id bigint, text string")
-    b_clean, b_hits = dc.ngram_decontaminate(batch_docs, bench, n=5)
-    assert got_clean == {r.doc_id for r in b_clean.collect()}
-    assert got_hit_docs == {r.doc_id for r in b_hits.collect()}
-    # sanity on the scenario itself: 1 and 3 share the 5-gram with the
-    # benchmark, 2/4/5 are clean
-    assert got_clean == {2, 4, 5} and got_hit_docs == {1, 3}
-
-
 def test_parquet_sink_exactly_once_across_restarts(spark, tmp_path):
     """The checkpointed file sink is exactly-once across query RESTARTS:
     run to exhaustion, land more input, re-run with the SAME checkpoint —
@@ -610,33 +568,6 @@ def test_stateful_agg_on_rocksdb_state_store(spark, tmp_path):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     assert rocks == default and len(rocks) == 5
-
-
-def test_transform_with_state_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas (arbitrary-stateful v2) totals equal
-    the plain batch aggregate — parity with the applyInPandasWithState
-    twin's contract. Skipped where google.protobuf (the v2 state-server
-    wire format) is absent; the gate itself is asserted either way."""
-    import pytest
-
-    if not se.tws_available():
-        with pytest.raises(ImportError, match="protobuf"):
-            se.running_totals_tws(
-                se.stream_events(spark, _write_events(spark, tmp_path, [(1, 1, 1, 1.0)], subdir="twsgate"))
-            )
-        pytest.skip("google.protobuf not in this container; gate verified")
-    rows = [(i, 1_000_000 + i, i % 4, float(i % 7)) for i in range(80)]
-    d = _write_events(spark, tmp_path, rows, subdir="tws")
-    stream = se.stream_events(spark, d)
-    totals = se.running_totals_tws(stream)
-    out = se.run_to_memory(totals, spark, output_mode="update")
-    # last row per user = final state (single batch → one row each)
-    final = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
-    want = {}
-    for _, _, uid, val in rows:
-        n, t = want.get(uid, (0, 0.0))
-        want[uid] = (n + 1, t + val)
-    assert final == want
 
 
 def test_empty_stream_paths_return_empty(spark, tmp_path):

@@ -37,12 +37,6 @@ def test_token_at_negative_index(spark):
     assert (row.last, row.second_last, row.first) == ("d", "c", "a")
 
 
-def test_explode_tokens(spark):
-    df = spark.createDataFrame([("x y",), ("z",)], "v string")
-    toks = [r.token for r in strings.explode_tokens(df, "v").collect()]
-    assert sorted(toks) == ["x", "y", "z"]
-
-
 def test_json_get_missing_key_null(spark):
     df = spark.createDataFrame(
         [('{"k": 5, "s": "hi"}',), ('{"other": 1}',), ("not json",)], "p string"

@@ -8,6 +8,30 @@ from spark_ml_showcase_spark.functions import text as T
 from spark_ml_showcase_spark.operators import multimodal
 
 
+def encode_wav(
+    n_frames: int, framerate: int, amplitude: int, *, period: int = 16
+) -> bytes:
+    """Build a mono 16-bit PCM WAV whose samples are a square wave of the
+    given amplitude (exact integer mean-of-squares, so decoded stats are
+    reproducible in SQL)."""
+    import io
+    import struct
+    import wave
+
+    bio = io.BytesIO()
+    with wave.open(bio, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(framerate)
+        half = period // 2
+        samples = [
+            amplitude if (i % period) < half else -amplitude
+            for i in range(n_frames)
+        ]
+        wf.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+    return bio.getvalue()
+
+
 def test_token_counts(spark):
     df = spark.createDataFrame(
         [("hello world",), ("  spaced   out  ",), ("",), ("   ",), ("one",)],
@@ -122,7 +146,7 @@ def test_bmp_padding_residues_local():
 
 
 def test_wav_codec_roundtrip_local():
-    buf = multimodal.encode_wav(n_frames=64, framerate=8000, amplitude=1000)
+    buf = encode_wav(n_frames=64, framerate=8000, amplitude=1000)
     nch, bits, feat = multimodal.decode_wav(buf)
     assert (nch, bits) == (1, 16)
     n_frames, rate, mean, rms = feat
@@ -204,7 +228,7 @@ def test_resize_images_operator(spark):
         w, h, means = multimodal.decode_bmp(bytes(r.payload))
         assert (w, h) == (4, 3)
     # non-BMP payloads pass through untouched
-    wav = multimodal.encode_wav(64, 8000, 1000)
+    wav = encode_wav(64, 8000, 1000)
     mixed = spark.createDataFrame([(99, bytearray(wav))], "id bigint, payload binary")
     (row,) = multimodal.resize_images(mixed, 4, 3).collect()
     assert not row.resized and bytes(row.payload) == wav and row.width is None

@@ -100,23 +100,6 @@ def test_manifest_records_schema(spark, tmp_path):
     assert m["n_rows"] == 1
 
 
-def test_compact_preserves_content_and_shrinks_files(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    for i in range(3):  # three appends → ≥3 files
-        versioned.write_snapshot(
-            _df(spark, [(i, f"t{i}")]).repartition(2), t, append=(i > 0)
-        )
-    before = versioned._read_manifest(t, 2)
-    v = versioned.compact_snapshot(spark, t, target_files=1)
-    after = versioned._read_manifest(t, v)
-    assert len(after["files"]) < len(before["files"])
-    assert after["n_rows"] == before["n_rows"] == 3
-    # content-identical: diff vs parent is empty
-    assert (
-        versioned.snapshot_diff(spark, t, 2, v, "id", ["text"]).count() == 0
-    )
-
-
 def test_expire_and_vacuum_keep_live_shared_files(spark, tmp_path):
     t = str(tmp_path / "tbl")
     versioned.write_snapshot(_df(spark, [(1, "a")]), t)          # v0

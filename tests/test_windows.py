@@ -15,25 +15,6 @@ def _df(spark):
     )
 
 
-def test_row_number_and_lag_lead(spark):
-    out = windows.with_row_number(_df(spark), ["k"], [("seq", "asc")])
-    rns = {(r.k, r.seq): r.rn for r in out.collect()}
-    assert rns[("a", 1)] == 1 and rns[("a", 3)] == 3 and rns[("b", 1)] == 1
-    ll = windows.with_lag_lead(_df(spark), "v", ["k"], [("seq", "asc")])
-    row = {r.seq: r for r in ll.filter(F.col("k") == "a").collect()}
-    assert row[2].v_lag == 10.0 and row[2].v_lead == 5.0
-    assert row[1].v_lag is None and row[3].v_lead is None
-
-
-def test_running_agg_cumulative(spark):
-    out = windows.running_agg(_df(spark), "v", ["k"], [("seq", "asc")])
-    vals = [
-        r.running_v
-        for r in out.filter(F.col("k") == "a").orderBy("seq").collect()
-    ]
-    assert vals == [10.0, 30.0, 35.0]
-
-
 def test_tumbling_sliding_session_builders(spark):
     df = spark.createDataFrame(
         [(1, 0), (2, 1800), (3, 3600), (4, 9000)], "id bigint, t bigint"

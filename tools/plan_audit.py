@@ -285,7 +285,9 @@ ALLOWLIST = {
 
 def normalize_plan(plan: str) -> str:
     """The plan text with every per-process token masked: expression
-    ids (``#12L``), exchange ``plan_id``s, RDD ids, the ids of already
+    ids (``#12L``), the suffixes PySpark's per-process counter gives
+    lambda variables (``x_461``, shifted by every earlier higher-order
+    function), exchange ``plan_id``s, RDD ids, the ids of already
     run AQE query stages (numbered in submission order), paths under
     the per-process ``run_dir`` root (staged-store keys may fold in the
     application id) and paths in the checkout (Spark truncates a long
@@ -293,6 +295,7 @@ def normalize_plan(plan: str) -> str:
     tmp = re.escape(tempfile.gettempdir())
     plan = re.sub(tmp + r"/smss_run_[^\s,\]]*", "<run_dir>", plan)
     plan = re.sub(re.escape(REPO) + r"[^\s,\]]*", "<repo>", plan)
+    plan = re.sub(r"(lambda [A-Za-z_]\w*?)_\d+(?=#)", r"\1_", plan)
     plan = re.sub(r"#\d+L?", "#", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
     plan = re.sub(r"QueryStage \d+", "QueryStage", plan)

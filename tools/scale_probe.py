@@ -806,7 +806,7 @@ def probe_maxsim_rerank_1m(spark):
     qdocs = pooled.filter(F.col("vec_id") % 2500 == 0)
     cands = (
         similarity.ivf_probe(
-            assigned, cent, qdocs, 60, n_probe=6, vectorized=True
+            assigned, cent, qdocs, 60, n_probe=6
         )
         .filter(F.col("query_id") != F.col("cand_id"))
         .select(F.col("query_id").alias("qd"), F.col("cand_id").alias("cd"))
@@ -821,7 +821,7 @@ def probe_maxsim_rerank_1m(spark):
     )
     scored = (
         pair.withColumn(
-            "_cos", F.round(similarity.cosine_pandas_udf()("qv", "v"), 6)
+            "_cos", F.round(similarity.cosine_udf()("qv", "v"), 6)
         )
         .groupBy("qd", "cd", "qt")
         .agg(F.max("_cos").alias("m"))
@@ -969,7 +969,7 @@ def probe_quantize_search_10m(spark):
     """int8 embedding quantization + cosine top-10 at 10M×16-dim: the
     100 TB ANN storage path (quantize once at ingest, search the 4×
     smaller int8 corpus). Vectors from independent xxhash64 streams per
-    dimension; quantize_int8 is pure codegen'd column math, the search
+    dimension; quantize_int8_np is one Arrow pass per batch, the search
     is one broadcast query reranked with TakeOrdered — no shuffle."""
     from spark_ml_showcase_spark.functions import similarity
 
